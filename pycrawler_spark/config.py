@@ -8,7 +8,7 @@ analog in a corpus-driven Spark engine and are intentionally absent.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -52,8 +52,6 @@ class CrawlConfig:
     # `crawler.initial` attribute, SURVEY.md §5); we implement the
     # intended initial-only semantics.
     login_seed_injection: bool = False
-    # per-partition lineage table (north rule; no reference analog)
-    lineage: bool = True
 
     # -- determinism (SURVEY.md §7) -------------------------------------
     # The reference shuffles discovered links with an unseeded
@@ -77,11 +75,9 @@ class CrawlConfig:
 
     # -- error codes (config-example.py:63) ------------------------------
     code_response_error: int = -1
-    code_crawler_error: int = -2
     code_robots_blocked: int = -3   # engine addition (no reference analog)
 
     # -- scale knobs ------------------------------------------------------
-    shuffle_partitions: int = 32
     host_buckets: int = 32          # hash-partition count for host-keyed state
     broadcast_wave_max_rows: int = 2_000_000  # broadcast fetch-wave side of the
                                     # corpus join below this size, else shuffle
@@ -93,11 +89,10 @@ class CrawlConfig:
     # never corpus-sized); big waves have law-of-large-numbers balance
     # across thousands of scan partitions and skip the extra exchange.
     udf_balance_max_rows: int = 200_000
-    hot_host_threshold: int = 100_000  # candidates per host above which the
-                                    # link pipeline salts the host key
+    # hot-host salting: frontier and compaction writes spread each host
+    # over this many partitions, so a mega-host never lands in one
     salt_buckets: int = 16
     bloom_fpp: float = 0.01
-    bloom_min_items: int = 1024
     # directory-partition fan-out of the persistent seen table
     # (sbucket = task_id mod seen_buckets); politeness sub-waves prune
     # their seen read to the buckets of the tasks they schedule
@@ -115,6 +110,13 @@ class CrawlConfig:
     @property
     def per_page_cost_ms(self) -> int:
         return self.wait_before_load_ms + self.wait_after_load_ms
+
+    @property
+    def sub_waves(self) -> bool:
+        """Whether a depth runs as scheduler-planned sub-waves (per-host
+        politeness budgets and/or robots blocking) instead of one atomic
+        wave that fetches the whole depth."""
+        return self.politeness or self.obey_robots
 
     @property
     def host_wave_budget(self) -> int:

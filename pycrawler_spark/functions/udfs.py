@@ -9,7 +9,8 @@ JVM built-ins (md5/sha2, concat, rlike, ...) is NOT here — use
 
 from __future__ import annotations
 
-from typing import List, Optional
+from itertools import repeat
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -37,21 +38,45 @@ URL_STRUCT = T.StructType(
 
 _URL_FIELDS = [f.name for f in URL_STRUCT.fields]
 
+# --- URL parse / join / resolve UDFs (X1, X2/X3, X4) -----------------------
 
-def _parse_one(u: Optional[str]):
-    p = urlkit.parse_url(u) if u is not None else None
+RESOLVED_LINK_STRUCT = T.StructType(
+    URL_STRUCT.fields + [T.StructField("norm", T.StringType())]
+)
+_RESOLVED_FIELDS = [f.name for f in RESOLVED_LINK_STRUCT.fields]
+
+
+def _url_tuple(p: Optional[urlkit.ParsedUrl], norm: bool = False) -> tuple:
+    """One ParsedUrl as a URL_STRUCT row (all-null for None); with
+    ``norm``, as a RESOLVED_LINK_STRUCT row (plus the X1 seen key)."""
     if p is None:
-        return (None,) * len(_URL_FIELDS)
-    return (
+        return (None,) * (len(_RESOLVED_FIELDS) if norm else len(_URL_FIELDS))
+    full = urlkit.url_str_with_query_fragment(p)
+    t = (
         p.scheme, p.netloc, p.host, p.path, p.query, p.fragment, p.fld,
-        p.suffix, urlkit.url_origin(p), urlkit.url_str_with_query_fragment(p),
+        p.suffix, urlkit.url_origin(p), full,
     )
+    return t + (urlkit.normalize_url(full),) if norm else t
+
+
+def _href_frame(base_urls: pd.Series, hrefs: pd.Series, norm: bool) -> pd.DataFrame:
+    """X4 urljoin + X2 parse (+ X1 normalize with ``norm``) of each
+    href against its base URL. The base page URL repeats for every
+    link of a page — parse it once per distinct base per batch."""
+    base_cache: dict = {}
+    rows = []
+    for base, href in zip(base_urls, hrefs):
+        if base not in base_cache:
+            base_cache[base] = urlkit.parse_url(base) if base is not None else None
+        p = base_cache[base]
+        rows.append(_url_tuple(urlkit.url_from_href(href, p) if p is not None else None, norm))
+    return pd.DataFrame(rows, columns=_RESOLVED_FIELDS if norm else _URL_FIELDS)
 
 
 @pandas_udf(URL_STRUCT)
 def parse_url_udf(urls: pd.Series) -> pd.DataFrame:
     """X2 get_tld_object + X3 accessors (utils.py:37-41, 68-87)."""
-    rows = [_parse_one(u) for u in urls]
+    rows = [_url_tuple(urlkit.parse_url(u) if u is not None else None) for u in urls]
     return pd.DataFrame(rows, columns=_URL_FIELDS)
 
 
@@ -66,196 +91,20 @@ def normalize_url_udf(urls: pd.Series) -> pd.Series:
 def join_href_udf(base_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
     """X4 get_url_from_href (utils.py:89-94): urljoin against the page
     URL (with query+fragment), then parse/PSL-validate."""
-    rows = []
-    for base, href in zip(base_urls, hrefs):
-        p = urlkit.parse_url(base) if base is not None else None
-        r = urlkit.url_from_href(href, p) if p is not None else None
-        if r is None:
-            rows.append((None,) * len(_URL_FIELDS))
-        else:
-            rows.append(
-                (
-                    r.scheme, r.netloc, r.host, r.path, r.query, r.fragment,
-                    r.fld, r.suffix, urlkit.url_origin(r),
-                    urlkit.url_str_with_query_fragment(r),
-                )
-            )
-    return pd.DataFrame(rows, columns=_URL_FIELDS)
-
-
-# --- fused link resolution (X4 + X1 in one Arrow pass) --------------------
-
-RESOLVED_LINK_STRUCT = T.StructType(
-    URL_STRUCT.fields + [T.StructField("norm", T.StringType())]
-)
-_RESOLVED_FIELDS = [f.name for f in RESOLVED_LINK_STRUCT.fields]
+    return _href_frame(base_urls, hrefs, norm=False)
 
 
 @pandas_udf(RESOLVED_LINK_STRUCT)
 def resolve_href_udf(base_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
     """X4 urljoin + X2 parse + X1 normalize fused into ONE pass over
-    the exploded links (each as a separate UDF costs an extra Arrow
-    round-trip over the biggest intermediate of the wave). The base
-    page URL repeats for every link of a page — parse it once per
-    distinct base per batch."""
-    base_cache: dict = {}
-    rows = []
-    for base, href in zip(base_urls, hrefs):
-        p = base_cache.get(base)
-        if p is None and base is not None:
-            p = urlkit.parse_url(base)
-            base_cache[base] = p
-        r = urlkit.url_from_href(href, p) if p is not None else None
-        if r is None:
-            rows.append((None,) * len(_RESOLVED_FIELDS))
-        else:
-            full = urlkit.url_str_with_query_fragment(r)
-            rows.append(
-                (
-                    r.scheme, r.netloc, r.host, r.path, r.query, r.fragment,
-                    r.fld, r.suffix, urlkit.url_origin(r), full,
-                    urlkit.normalize_url(full),
-                )
-            )
-    return pd.DataFrame(rows, columns=_RESOLVED_FIELDS)
+    exploded links (each as a separate UDF costs an extra Arrow
+    round-trip over the link rows)."""
+    return _href_frame(base_urls, hrefs, norm=True)
 
 
-# --- HTML extraction UDFs (F1, X9, M4, M5) -------------------------------
+# --- fused per-page extraction (F1, X9, M4, M5 + X4/X1 link resolution) ---
 
-PAGE_FEATURES_STRUCT = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("meta_headers", T.ArrayType(T.StringType())),
-        T.StructField("has_login_form", T.BooleanType()),
-        T.StructField("has_cookie_banner", T.BooleanType()),
-        T.StructField("hrefs", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-@pandas_udf(PAGE_FEATURES_STRUCT)
-def page_features_udf(html: pd.Series) -> pd.DataFrame:
-    """Fused per-page extraction (M1/M2/M4/M5): html is the fat column;
-    each separate UDF ships it through Arrow again, so one fused pass
-    (one decode + one comment/script strip, htmlkit.page_features)
-    replaces five."""
-    return _pf_frame(html, True)
-
-
-@pandas_udf(PAGE_FEATURES_STRUCT)
-def page_features_nolinks_udf(html: pd.Series) -> pd.DataFrame:
-    """page_features without href extraction — for waves at the final
-    crawl depth (no link collection; the leaf wave is the largest one
-    in a BFS crawl). Same schema; hrefs column is null."""
-    return _pf_frame(html, False)
-
-
-def _pf_frame(html: pd.Series, with_hrefs: bool) -> pd.DataFrame:
-    # column-wise assembly: pd.DataFrame from a dict of lists skips the
-    # per-row tuple transpose (measurable at 10^5 rows/batch-set)
-    texts, metas, logins, cookies, hrefss = [], [], [], [], []
-    for h in html:
-        t, m, lg, ck, hr = htmlkit.page_features(h, with_hrefs)
-        texts.append(t)
-        metas.append(m)
-        logins.append(lg)
-        cookies.append(ck)
-        hrefss.append(hr)
-    return pd.DataFrame(
-        {
-            "extracted_text": texts,
-            "meta_headers": metas,
-            "has_login_form": logins,
-            "has_cookie_banner": cookies,
-            "hrefs": hrefss,
-        }
-    )
-
-PAGE_FEATURES_LINKS_STRUCT = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("meta_headers", T.ArrayType(T.StringType())),
-        T.StructField("has_login_form", T.BooleanType()),
-        T.StructField("has_cookie_banner", T.BooleanType()),
-        T.StructField("links", T.ArrayType(RESOLVED_LINK_STRUCT)),
-    ]
-)
-
-_NULL_LINK = (None,) * len(_RESOLVED_FIELDS)
-
-
-def _full_link_tuple(r, full: str):
-    return (
-        r.scheme, r.netloc, r.host, r.path, r.query, r.fragment,
-        r.fld, r.suffix, urlkit.url_origin(r), full,
-        urlkit.normalize_url(full),
-    )
-
-
-def _slim_link_tuple(r, full: str):
-    return (
-        r.scheme, r.host, r.fld, urlkit.url_origin(r),
-        full, urlkit.normalize_url(full),
-    )
-
-
-def _resolve_frame(html, base_urls, build_link, null_link) -> pd.DataFrame:
-    """The ONE fused extraction+resolution loop shared by the full and
-    slim struct UDFs — the positional parity invariant (all-null
-    placeholder for unresolvable hrefs, base-None handling) lives in
-    exactly one place."""
-    texts, metas, logins, cookies, linkss = [], [], [], [], []
-    for h, base in zip(html, base_urls):
-        t, m, lg, ck, hr = htmlkit.page_features(h, True)
-        texts.append(t)
-        metas.append(m)
-        logins.append(lg)
-        cookies.append(ck)
-        p = urlkit.parse_url(base) if base is not None else None
-        links = []
-        for href in hr or []:
-            r = urlkit.url_from_href(href, p) if p is not None else None
-            if r is None:
-                links.append(null_link)
-            else:
-                full = urlkit.url_str_with_query_fragment(r)
-                links.append(build_link(r, full))
-        linkss.append(links)
-    return pd.DataFrame(
-        {
-            "extracted_text": texts,
-            "meta_headers": metas,
-            "has_login_form": logins,
-            "has_cookie_banner": cookies,
-            "links": linkss,
-        }
-    )
-
-
-@pandas_udf(PAGE_FEATURES_LINKS_STRUCT)
-def page_features_resolve_udf(
-    html: pd.Series, base_urls: pd.Series
-) -> pd.DataFrame:
-    """page_features + href resolution fused into ONE Python pass.
-
-    The split pipeline (page_features -> ship hrefs to JVM -> explode
-    -> resolve_href_udf) pays a second Arrow round-trip over the
-    wave's biggest intermediate (every discovered link) plus a second
-    Python stage spin-up; here the hrefs never leave Python unresolved
-    — the page's base URL is parsed once and every href resolves in
-    the same batch that extracted it. The JVM side then only explodes
-    already-resolved structs.
-
-    Parity invariant: entry i of ``links`` corresponds to href i in
-    document order (F1, modules/CollectUrls.py:60-77) — unresolvable
-    hrefs yield an all-null struct rather than being dropped, so
-    ``posexplode`` downstream assigns the SAME pos numbering as the
-    unfused path (which filters after explode) and crawl-order parity
-    is preserved byte-for-byte."""
-    return _resolve_frame(html, base_urls, _full_link_tuple, _NULL_LINK)
-
-
-# Slim variant: the candidate pipeline (operators/links.py) touches
+# Slim link struct: the candidate pipeline (operators/links.py) touches
 # exactly these six fields — scheme/origin/fld for F3-F5, url_full/
 # norm/host for the frontier row. netloc/path/query/fragment/suffix
 # are substrings of url_full (or derivable), so shipping them through
@@ -273,17 +122,91 @@ SLIM_LINK_STRUCT = T.StructType(
     ]
 )
 
-PAGE_FEATURES_LINKS_SLIM_STRUCT = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("meta_headers", T.ArrayType(T.StringType())),
-        T.StructField("has_login_form", T.BooleanType()),
-        T.StructField("has_cookie_banner", T.BooleanType()),
-        T.StructField("links", T.ArrayType(SLIM_LINK_STRUCT)),
-    ]
-)
 
-_NULL_SLIM_LINK = (None,) * len(SLIM_LINK_STRUCT.fields)
+def _page_struct(link_struct: T.StructType) -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField("extracted_text", T.StringType()),
+            T.StructField("meta_headers", T.ArrayType(T.StringType())),
+            T.StructField("has_login_form", T.BooleanType()),
+            T.StructField("has_cookie_banner", T.BooleanType()),
+            T.StructField("links", T.ArrayType(link_struct)),
+        ]
+    )
+
+
+PAGE_FEATURES_LINKS_STRUCT = _page_struct(RESOLVED_LINK_STRUCT)
+PAGE_FEATURES_LINKS_SLIM_STRUCT = _page_struct(SLIM_LINK_STRUCT)
+
+
+def _full_link_tuple(r: Optional[urlkit.ParsedUrl]) -> tuple:
+    return _url_tuple(r, norm=True)
+
+
+def _slim_link_tuple(r: Optional[urlkit.ParsedUrl]) -> tuple:
+    if r is None:
+        return (None,) * len(SLIM_LINK_STRUCT.fields)
+    full = urlkit.url_str_with_query_fragment(r)
+    return (
+        r.scheme, r.host, r.fld, urlkit.url_origin(r),
+        full, urlkit.normalize_url(full),
+    )
+
+
+def _resolve_frame(html, base_urls=None, link_tuple=None) -> pd.DataFrame:
+    """The ONE fused extraction(+resolution) loop behind every
+    ``page_features_*`` UDF — the positional parity invariant (all-null
+    placeholder for unresolvable hrefs, base-None handling) lives in
+    exactly one place. Without ``link_tuple`` hrefs are not extracted
+    and ``links`` is null."""
+    with_links = link_tuple is not None
+    texts, metas, logins, cookies, linkss = [], [], [], [], []
+    for h, base in zip(html, base_urls if with_links else repeat(None)):
+        t, m, lg, ck, hr = htmlkit.page_features(h, with_links)
+        texts.append(t)
+        metas.append(m)
+        logins.append(lg)
+        cookies.append(ck)
+        if not with_links:
+            linkss.append(None)
+            continue
+        p = urlkit.parse_url(base) if base is not None else None
+        linkss.append([
+            link_tuple(urlkit.url_from_href(href, p) if p is not None else None)
+            for href in hr or []
+        ])
+    return pd.DataFrame(
+        {
+            "extracted_text": texts,
+            "meta_headers": metas,
+            "has_login_form": logins,
+            "has_cookie_banner": cookies,
+            "links": linkss,
+        }
+    )
+
+
+@pandas_udf(PAGE_FEATURES_LINKS_STRUCT)
+def page_features_resolve_udf(
+    html: pd.Series, base_urls: pd.Series
+) -> pd.DataFrame:
+    """Per-page extraction + href resolution fused into ONE Python
+    pass (the full link struct, for jobs with F6 url_filters).
+
+    A split pipeline (extract hrefs -> ship them to the JVM -> explode
+    -> resolve) would pay a second Arrow round-trip over the wave's
+    biggest intermediate (every discovered link) plus a second Python
+    stage spin-up; here the hrefs never leave Python unresolved — the
+    page's base URL is parsed once and every href resolves in the same
+    batch that extracted it. The JVM side then only explodes
+    already-resolved structs.
+
+    Parity invariant: entry i of ``links`` corresponds to href i in
+    document order (F1, modules/CollectUrls.py:60-77) — unresolvable
+    hrefs yield an all-null struct rather than being dropped, so
+    ``posexplode`` downstream numbers links by document position and
+    crawl-order parity is preserved byte-for-byte."""
+    return _resolve_frame(html, base_urls, _full_link_tuple)
 
 
 @pandas_udf(PAGE_FEATURES_LINKS_SLIM_STRUCT)
@@ -293,7 +216,15 @@ def page_features_resolve_slim_udf(
     """page_features_resolve_udf with the slim link struct. Same fused
     single Python pass, same positional parity invariant (unresolvable
     hrefs stay as all-null entries)."""
-    return _resolve_frame(html, base_urls, _slim_link_tuple, _NULL_SLIM_LINK)
+    return _resolve_frame(html, base_urls, _slim_link_tuple)
+
+
+@pandas_udf(PAGE_FEATURES_LINKS_SLIM_STRUCT)
+def page_features_nolinks_udf(html: pd.Series) -> pd.DataFrame:
+    """Per-page extraction without href extraction — for waves at the
+    final crawl depth (no link collection; the leaf wave is the largest
+    one in a BFS crawl). ``links`` is null."""
+    return _resolve_frame(html)
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
@@ -301,24 +232,6 @@ def extract_hrefs_udf(html: pd.Series) -> pd.Series:
     """F1 link extraction: a[href] values in document order
     (modules/CollectUrls.py:60-77)."""
     return html.map(htmlkit.extract_hrefs)
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_meta_udf(html: pd.Series) -> pd.Series:
-    """X9 meta http-equiv tags (modules/SaveURL.py:35-38)."""
-    return html.map(htmlkit.extract_meta_http_equiv)
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Visible-text extraction — byte-identical invariant surface."""
-    return html.map(htmlkit.extract_text)
-
-
-@pandas_udf(T.BooleanType())
-def login_form_udf(html: pd.Series) -> pd.Series:
-    """M4 FindLoginForms static detection (FindLoginForms.py:88-181)."""
-    return html.map(htmlkit.detect_login_form)
 
 
 @pandas_udf(T.StringType())
@@ -334,29 +247,12 @@ def refresh_target_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(T.BooleanType())
-def cookie_banner_udf(html: pd.Series) -> pd.Series:
-    """M5 AcceptCookies keyword detection (AcceptCookies.py:19-25,86-110)."""
-    return html.map(htmlkit.detect_cookie_banner)
-
-
-# --- text UDFs (X5, X6, training-data ops) --------------------------------
-
-@pandas_udf(T.StringType())
-def tokenize_udf(text: pd.Series) -> pd.Series:
-    """X5 tokenize (utils.py:230-251)."""
-    return text.map(lambda t: textkit.tokenize(t) if t is not None else None)
-
+# --- text UDFs (X6, X8, training-data ops) --------------------------------
 
 @pandas_udf(T.MapType(T.StringType(), T.StringType()))
 def decode_udf(text: pd.Series) -> pd.Series:
     """X6 multi-codec decode (utils.py:253-314)."""
     return text.map(lambda t: textkit.decode(t) if t is not None else None)
-
-
-@pandas_udf(T.StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: textkit.detect_lang(t) if t is not None else None)
 
 
 @pandas_udf(T.LongType())
@@ -369,11 +265,6 @@ def simhash_udf(text: pd.Series) -> pd.Series:
         return v - (1 << 64) if v >= (1 << 63) else v
 
     return text.map(f)
-
-
-@pandas_udf(T.ArrayType(T.LongType()))
-def winnow_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: textkit.winnow_fingerprint(t) if t is not None else None)
 
 
 @pandas_udf(T.BinaryType())

@@ -395,13 +395,3 @@ def extract_resource_refs(html: "bytes | str | None"):
             if h:
                 out.append(("stylesheet", _htmllib.unescape(h.group(2) or h.group(3) or h.group(4))))
     return out
-
-
-# --- counts used by A4 (utils.py:106-110) --------------------------------
-
-def count_password_fields(html: "bytes | str | None") -> int:
-    return sum(1 for t in _input_types(_strip_nontext(to_text(html))) if t == "password")
-
-
-def count_forms(html: "bytes | str | None") -> int:
-    return len(_FORM_RE.findall(_strip_nontext(to_text(html))))

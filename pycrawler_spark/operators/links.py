@@ -3,11 +3,12 @@
 Two-stage design (SURVEY.md §4 "custom engine code"):
 
 1. **Distributed stage** (:func:`candidate_links`): everything
-   per-row and vectorizable — href extraction (F1), urljoin + PSL
-   parse (F2/X4), scheme/origin/eTLD+1 filters (F3-F5), adult-list
-   anti-join (F7), normalization (X1), deterministic shuffle key.
-   Runs as pandas UDFs + Column expressions over the exploded links;
-   scales with the wave, shuffles only slim columns (html never
+   per-row and vectorizable. Href extraction (F1), urljoin + PSL
+   parse (F2/X4) and normalization (X1) already ran in the wave's
+   fused per-page UDF; here Column expressions over the exploded
+   links apply the scheme/origin/eTLD+1 filters (F3-F5), the
+   adult-list anti-join (F7) and the deterministic shuffle key.
+   Scales with the wave, shuffles only slim columns (html never
    leaves the fetch stage).
 
 2. **Sequential per-task kernel** (:func:`dedup_budget_kernel`): the
@@ -31,11 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from pycrawler_spark.config import CrawlConfig
-from pycrawler_spark.functions.udfs import (
-    det_shuffle_key,
-    extract_hrefs_udf,
-    resolve_href_udf,
-)
+from pycrawler_spark.functions.udfs import det_shuffle_key
 
 CANDIDATE_COLS = [
     "task_id", "kind", "parent_seq", "pos", "url", "url_norm", "host",
@@ -66,10 +63,11 @@ def candidate_links(
     """Distributed candidate pipeline.
 
     ``hits``: successfully fetched parents —
-    (task_id, seq, url, url_norm, html), optionally with redirect
-    resolution (url_final, final_norm): links resolve against the
-    FINAL document url and the self-seen key is the FINAL url's
-    normalized form (the reference adds ``page.url`` — post-redirect —
+    (task_id, seq, url, url_norm, links), ``links`` being the resolved
+    link array of ``page_features_resolve_udf`` (or its slim twin),
+    optionally with redirect resolution (final_norm): links resolve
+    against the FINAL document url and the self-seen key is the FINAL
+    url's normalized form (the reference adds ``page.url`` — post-redirect —
     to seen, CollectUrls.py:46-49), while ``from_url`` linkage keeps
     the requested url (SaveURL.py fromurl_id = the dequeued URL row).
     ``tasks_dim``: (task_id, scheme, site, landing_origin, budget) —
@@ -90,9 +88,7 @@ def candidate_links(
     Returns the kernel input: parent rows (kind='parent', pos=-1) plus
     surviving link rows (kind='link') with normalized keys.
     """
-    has_final = "url_final" in hits.columns
-    final_url = F.col("url_final") if has_final else F.col("url")
-    final_norm = F.col("final_norm") if has_final else F.col("url_norm")
+    final_norm = F.col("final_norm") if "final_norm" in hits.columns else F.col("url_norm")
     parents = hits.select(
         "task_id",
         F.lit("parent").alias("kind"),
@@ -104,34 +100,15 @@ def candidate_links(
         F.lit(None).cast("string").alias("skey"),
     )
 
-    if "links" in hits.columns:
-        # links arrive ALREADY RESOLVED from the wave's fused per-page
-        # UDF (page_features_resolve_udf): no second Arrow pass, the
-        # explode below is pure JVM. pos numbering matches the unfused
-        # path because unresolvable hrefs ride along as all-null
-        # structs and are filtered AFTER posexplode.
-        parsed = hits.select(
-            "task_id",
-            F.col("seq").alias("parent_seq"),
-            F.posexplode("links").alias("pos", "link"),
-        ).filter(F.col("link.url_full").isNotNull())
-    else:
-        # fallback (tests / callers without the fused pass): extract
-        # hrefs, then urljoin + PSL parse + normalize fused into one
-        # Arrow pass over the exploded links
-        hrefs_col = (
-            F.col("hrefs") if "hrefs" in hits.columns
-            else extract_hrefs_udf(F.col("html"))
-        )
-        exploded = hits.select(
-            "task_id",
-            F.col("seq").alias("parent_seq"),
-            final_url.alias("parent_url"),
-            F.posexplode(hrefs_col).alias("pos", "href"),
-        )
-        parsed = exploded.withColumn(
-            "link", resolve_href_udf(F.col("parent_url"), F.col("href"))
-        ).filter(F.col("link.url_full").isNotNull())
+    # links arrive ALREADY RESOLVED from the wave's fused per-page UDF
+    # (page_features_resolve_udf): the explode below is pure JVM.
+    # Unresolvable hrefs ride along as all-null structs and are
+    # filtered AFTER posexplode, so pos is the href's document position.
+    parsed = hits.select(
+        "task_id",
+        F.col("seq").alias("parent_seq"),
+        F.posexplode("links").alias("pos", "link"),
+    ).filter(F.col("link.url_full").isNotNull())
 
     j = parsed.join(F.broadcast(tasks_dim), "task_id")
     if cfg.same_scheme:   # F3 (CollectUrls.py:86-87)

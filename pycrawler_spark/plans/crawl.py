@@ -29,19 +29,28 @@ import json
 import os
 import shutil
 import time
-from typing import Dict, List, Optional
+from concurrent.futures import ThreadPoolExecutor
+from typing import Dict, Iterator, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.window import Window
 
+from pycrawler_spark import htmlkit, psl, textkit
 from pycrawler_spark.config import CrawlConfig
 from pycrawler_spark.functions.udfs import (
+    host_bucket,
     normalize_url_udf,
     page_features_nolinks_udf,
+    page_features_resolve_slim_udf,
     page_features_resolve_udf,
     parse_url_udf,
     refresh_target_udf,
 )
 from pycrawler_spark.operators.links import candidate_links, dedup_budget_kernel
+from pycrawler_spark.operators.requests import derive_requests, instrument_media
 from pycrawler_spark.operators.scheduler import schedule_wave
 from pycrawler_spark.operators.seen import relevant_seen
 from pycrawler_spark.util import empty_df
@@ -54,6 +63,24 @@ FETCH_COLS = [
     "meta_headers", "has_login_form", "has_cookie_banner", "redirect_chain",
     "body_sha256", "resheaders",
 ]
+
+
+def _pageless_rows(rows: DataFrame, wave_id: int, code: int, chain: Column) -> DataFrame:
+    """Fetch rows (FETCH_COLS minus repetition) for scheduled URLs that
+    yielded no page — corpus misses and robots-blocked URLs: the
+    frontier identity, ``code`` and ``chain`` carry data, every
+    page-derived column is null."""
+    def null(name: str, typ: str = "string") -> Column:
+        return F.lit(None).cast(typ).alias(name)
+
+    return rows.select(
+        F.lit(wave_id).alias("wave_id"), "task_id", "url", null("url_final"),
+        "url_norm", "host", "depth", "seq", F.lit(code).alias("code"),
+        null("method"), null("content"), null("extracted_text"),
+        null("meta_headers", "array<string>"),
+        null("has_login_form", "boolean"), null("has_cookie_banner", "boolean"),
+        chain.alias("redirect_chain"), null("body_sha256"), null("resheaders"),
+    )
 
 
 class CrawlEngine:
@@ -132,9 +159,6 @@ class CrawlEngine:
         """Driver-side parquet write for genuinely-tiny tables
         (metrics: ONE row per wave): one file, no Spark job, same
         directory layout. Never used for task-proportional data."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         d = self._dir(table, wave)
         os.makedirs(d, exist_ok=True)
         pq.write_table(
@@ -272,27 +296,7 @@ class CrawlEngine:
             shutil.rmtree(self.workdir)
         os.makedirs(self.workdir)
 
-        tasks = self._derive_tasks(seeds)
-        frontier0 = self._frontier0(tasks)
-        wave0_tables = ["tasks", "frontier"]
-        if self.cfg.login_seed_injection:
-            # M4 FindLoginForms seed injection (FindLoginForms.py:39-63):
-            # one google-dork URL at depth DEPTH-1 plus /login/-style
-            # suffixes of the landing URL (and of scheme://fld when
-            # SAME_ETLDP1) at depth DEPTH, added via add_url semantics
-            # (seen-add first, dedup by normalized key, insertion order).
-            assert self.cfg.depth >= 1, "login_seed_injection needs depth >= 1"
-            frontier0, seen0 = self._login_injection(tasks, frontier0)
-            self._write_seen(seen0, 0, n_files=1)
-            wave0_tables.append("seen")
-        frontier0 = frontier0.cache()
-        frontier0.repartition(self.cfg.host_buckets, "host").write.parquet(
-            self._dir("frontier", 0)
-        )
-        per_depth = self._write_tasks(tasks, frontier0, 0)
-        frontier0.unpersist()
-        from pycrawler_spark import htmlkit as _hk, psl as _psl, textkit as _tk
-
+        wave0_tables, per_depth = self._ingest(self._derive_tasks(seeds), 0)
         self._save_manifest(
             {
                 "job": self.job,
@@ -301,13 +305,13 @@ class CrawlEngine:
                 # reference-exact libraries were active for this job's
                 # outputs (byte-identical text invariant audit trail)
                 "extraction_modes": {
-                    "tokenize": _tk.tokenize_mode(),
-                    "meta_headers": _hk.extraction_mode(),
-                    "psl": _psl.psl_source(),
+                    "tokenize": textkit.tokenize_mode(),
+                    "meta_headers": htmlkit.extraction_mode(),
+                    "psl": psl.psl_source(),
                     # rule-set md5: a mis-packaged deployment where
                     # executors resolve a different list than the
                     # driver becomes auditable (compare per-process)
-                    "psl_fingerprint": _psl.psl_fingerprint(),
+                    "psl_fingerprint": psl.psl_fingerprint(),
                 },
                 "next_wave": 1,
                 "depth": 0,
@@ -319,14 +323,37 @@ class CrawlEngine:
             }
         )
 
+    def _ingest(self, tasks: DataFrame, wave_id: int):
+        """Write ``tasks`` as seed-ingest wave ``wave_id``: their
+        depth-0 frontier rows, the tasks snapshot and, with login
+        injection, the injected frontier + seen rows. Returns the
+        tables written and the per-depth insert counts."""
+        frontier = self._frontier0(tasks)
+        tables = ["tasks", "frontier"]
+        if self.cfg.login_seed_injection:
+            # M4 FindLoginForms seed injection (FindLoginForms.py:39-63):
+            # one google-dork URL at depth DEPTH-1 plus /login/-style
+            # suffixes of the landing URL (and of scheme://fld when
+            # SAME_ETLDP1) at depth DEPTH, added via add_url semantics
+            # (seen-add first, dedup by normalized key, insertion order).
+            assert self.cfg.depth >= 1, "login_seed_injection needs depth >= 1"
+            frontier, seen = self._login_injection(tasks, frontier)
+            self._write_seen(seen, wave_id, n_files=1)
+            tables.append("seen")
+        frontier = frontier.cache()
+        frontier.repartition(self.cfg.host_buckets, "host").write.parquet(
+            self._dir("frontier", wave_id)
+        )
+        per_depth = self._write_tasks(tasks, frontier, wave_id)
+        frontier.unpersist()
+        return tables, per_depth
+
     LOGIN_SUFFIXES = [
         "/login/", "/signin/", "/account/", "/profile/", "/auth/",
         "/authenticate/",
     ]
 
     def _login_injection(self, tasks: DataFrame, frontier0: DataFrame):
-        from pyspark.sql.window import Window
-
         cfg = self.cfg
         entries = [
             F.struct(
@@ -407,23 +434,12 @@ class CrawlEngine:
         n_new = new_tasks.count()
         if n_new == 0:
             return 0
-        frontier_new = self._frontier0(new_tasks)
-        tables = ["tasks", "frontier"]
-        if self.cfg.login_seed_injection:
-            frontier_new, seen_new = self._login_injection(new_tasks, frontier_new)
-            self._write_seen(seen_new, wave_id, n_files=1)
-            tables.append("seen")
-        frontier_new = frontier_new.cache()
-        frontier_new.repartition(self.cfg.host_buckets, "host").write.parquet(
-            self._dir("frontier", wave_id)
-        )
         # snapshot = existing tasks (max_seq already final) + new tasks
         # profiled against their own frontier rows — all Spark-side
-        per_depth = self._write_tasks(new_tasks, frontier_new, wave_id)
+        tables, per_depth = self._ingest(new_tasks, wave_id)
         latest.select(
             *self.spark.read.parquet(self._dir("tasks", wave_id)).columns
         ).write.mode("append").parquet(self._dir("tasks", wave_id))
-        frontier_new.unpersist()
         m["waves"].append(
             {"wave_id": wave_id, "depth": -1, "kind": "seeds",
              "tables": tables, "found": 0,
@@ -437,7 +453,9 @@ class CrawlEngine:
 
     def resume(self) -> None:
         """Drop any wave directories newer than the last committed wave
-        (interrupted mid-write), then continue from the manifest."""
+        (interrupted mid-write) and any half-written compaction snapshot
+        (``_compact_tmp``, see compact()), then continue from the
+        manifest."""
         m = self._load_manifest()
         committed = {w["wave_id"] for w in m["waves"]}
         for table in ("tasks", "frontier", "seen", "fetches", "metrics",
@@ -446,8 +464,7 @@ class CrawlEngine:
             if not os.path.isdir(base):
                 continue
             for d in os.listdir(base):
-                wid = int(d.split("=")[1])
-                if wid not in committed:
+                if d == "_compact_tmp" or int(d.split("=")[1]) not in committed:
                     shutil.rmtree(os.path.join(base, d))
         self.pages_path = m["pages_path"]
 
@@ -516,7 +533,7 @@ class CrawlEngine:
         """
         if self.cfg.max_redirects <= 0:
             return None  # no chain is ever followed (ADVICE: legal config)
-        if getattr(self, "_closure_df", None) is not None:
+        if self._closure_df is not None:
             return self._closure_df
         edges = self._redirect_edges()
         if edges is None:
@@ -636,21 +653,9 @@ class CrawlEngine:
         cfg = self.cfg
         wave_id = m["next_wave"]
         t0 = time.monotonic()
-
-        trace_on = os.environ.get("PYCRAWLER_TRACE", "") == "1"
-        _last = [time.monotonic()]
-
-        def trace(label: str) -> None:
-            if trace_on:
-                now = time.monotonic()
-                print(f"[wave {wave_id}] {label}: {now - _last[0]:.2f}s",
-                      flush=True)
-                _last[0] = now
-
-        use_scheduler = cfg.politeness or cfg.obey_robots
         frontier_waves = self._committed(m, "frontier")
 
-        if not use_scheduler:
+        if not cfg.sub_waves:
             # Atomic-depth mode, zero scheduling jobs: the manifest
             # records how many rows each wave inserted at each depth,
             # so the eligible set is exactly the frontier deltas newer
@@ -711,14 +716,12 @@ class CrawlEngine:
                 sched.unpersist()
                 return {"wave_id": wave_id, "depth": depth, "scheduled": 0,
                         "blocked": 0, "exhausted": True}
-        trace(f"schedule ({n_sched} urls)")
 
         # --- fetch = corpus equi-join (S4/J6; replaces crawler.py:165) ----
         # redirect chains resolve BEFORE the fetch join via the (tiny)
         # precomputed closure table, so the join runs on the FINAL url
         # and the corpus is scanned exactly once per wave
         closure = self._redirect_closure()
-        trace("closure ready")
         # localCheckpoint, not cache: the resolved wave feeds 5-6 jobs
         # per wave, and each would re-analyze the full lineage;
         # truncating it makes every downstream plan tiny. Durability
@@ -733,7 +736,6 @@ class CrawlEngine:
         # wave side, or the fetch join itself) materializes it — an
         # eager checkpoint here would be one more sequential job floor
         wave_r = self._resolve_targets(wave, closure).localCheckpoint(eager=False)
-        trace("wave resolved (lazy ckpt)")
         pages_raw = self._read_pages()
         # K1 fidelity: the reference persists response headers per
         # fetch (SaveURL.py:71-72 resheaders JSON). A stored-page
@@ -759,11 +761,10 @@ class CrawlEngine:
         # single html->Python pass per wave: sha + fused extraction in
         # the projection, html itself dropped from the cache (it is the
         # fat column; only collect_requests still needs it downstream).
-        # Link waves fuse href RESOLUTION into the same pass
-        # (page_features_resolve_udf): the resolved-link structs come
-        # back in one Arrow trip and the candidate pipeline's explode
-        # is pure JVM — no second Python stage over every discovered
-        # link. The final depth collects no links -> skip both.
+        # Link waves fuse href RESOLUTION into the same pass: the
+        # resolved-link structs come back in one Arrow trip and the
+        # candidate pipeline's explode is pure JVM. The final depth
+        # collects no links -> the same pass minus href extraction.
         collect_links = depth < cfg.depth and cfg.recursive
         if collect_links:
             # slim struct (6 fields) unless F6 url_filters are
@@ -771,10 +772,6 @@ class CrawlEngine:
             # component, so only then ship the full 11-field struct
             # through Arrow and the explode (links are the wave's
             # biggest intermediate).
-            from pycrawler_spark.functions.udfs import (
-                page_features_resolve_slim_udf,
-            )
-
             resolve = (
                 page_features_resolve_udf
                 if self.url_filters
@@ -810,14 +807,10 @@ class CrawlEngine:
         # finished blocks — lazy here would make two driver threads
         # race to materialize the same partitions (correct but noisy:
         # the loser's accumulator updates land on a cleaned-up job).
-        import concurrent.futures as _cf
-
-        pool = _cf.ThreadPoolExecutor(max_workers=5)
+        pool = ThreadPoolExecutor(max_workers=5)
         _pools.append(pool)  # cleaned up by _run_wave on any failure
         cache_hits = collect_links or cfg.collect_requests
-        pre_tasks_dim = pre_seen = None
         if cache_hits:
-            trace("hits defined")
             # the eager checkpoint is EXECUTOR work (the wave's fused
             # extraction UDF); run it from a pool thread and spend the
             # driver on the link stage's metadata reads (tasks/seen
@@ -825,18 +818,16 @@ class CrawlEngine:
             # driver-only time that previously idled all cores
             fut_ck = pool.submit(hits.localCheckpoint, True)
             if collect_links:
-                pre_tasks_dim = self._read(
+                tasks_dim = self._read(
                     "tasks", [max(self._committed(m, "tasks"))]
                 )
-                pre_seen = self._read("seen", self._committed(m, "seen"))
+                seen_all = self._read("seen", self._committed(m, "seen"))
             hits = fut_ck.result()
-            trace("hits checkpointed")
         # miss = requested url absent from corpus (chain empty) OR the
         # chain dead-ended on a target absent from corpus (chain kept)
         misses = wave_r.join(
             hits.select("task_id", "url"), ["task_id", "url"], "left_anti"
         )
-        trace("fetch join defined")
 
         # --- fetch-result rows (K1/M2 SaveURL; modules/SaveURL.py:46-78) ---
         hit_rows = hits.select(
@@ -859,44 +850,15 @@ class CrawlEngine:
             "body_sha256",
             "resheaders",
         )
-        miss_rows = misses.select(
-            F.lit(wave_id).alias("wave_id"),
-            "task_id",
-            "url",
-            F.lit(None).cast("string").alias("url_final"),
-            "url_norm",
-            "host",
-            "depth",
-            "seq",
-            F.lit(cfg.code_response_error).alias("code"),
-            F.lit(None).cast("string").alias("method"),
-            F.lit(None).cast("string").alias("content"),
-            F.lit(None).cast("string").alias("extracted_text"),
-            F.lit(None).cast("array<string>").alias("meta_headers"),
-            F.lit(None).cast("boolean").alias("has_login_form"),
-            F.lit(None).cast("boolean").alias("has_cookie_banner"),
-            "redirect_chain",
-            F.lit(None).cast("string").alias("body_sha256"),
-            F.lit(None).cast("string").alias("resheaders"),
+        fetch_rows = hit_rows.unionByName(
+            _pageless_rows(misses, wave_id, cfg.code_response_error,
+                           F.col("redirect_chain"))
         )
-        fetch_rows = hit_rows.unionByName(miss_rows)
         if blocked is not None and n_blocked:
-            blocked_rows = blocked.select(
-                F.lit(wave_id).alias("wave_id"), "task_id", "url",
-                F.lit(None).cast("string").alias("url_final"),
-                "url_norm", "host", "depth", "seq",
-                F.lit(cfg.code_robots_blocked).alias("code"),
-                F.lit(None).cast("string").alias("method"),
-                F.lit(None).cast("string").alias("content"),
-                F.lit(None).cast("string").alias("extracted_text"),
-                F.lit(None).cast("array<string>").alias("meta_headers"),
-                F.lit(None).cast("boolean").alias("has_login_form"),
-                F.lit(None).cast("boolean").alias("has_cookie_banner"),
-                F.expr(f"cast(null as {REDIRECT_T})").alias("redirect_chain"),
-                F.lit(None).cast("string").alias("body_sha256"),
-                F.lit(None).cast("string").alias("resheaders"),
+            fetch_rows = fetch_rows.unionByName(
+                _pageless_rows(blocked, wave_id, cfg.code_robots_blocked,
+                               F.expr(f"cast(null as {REDIRECT_T})"))
             )
-            fetch_rows = fetch_rows.unionByName(blocked_rows)
         # O3 repetitions: each scheduled URL is revisited k times
         # consecutively (database.py:275-279); same corpus -> same result.
         rep_col = (
@@ -908,8 +870,6 @@ class CrawlEngine:
         )
         # hit count observed ON the write job — no read-back job, no
         # recomputation of the fetch join
-        from pyspark.sql import Observation
-
         obs_f = Observation()
         fetch_rows = fetch_rows.observe(
             obs_f,
@@ -924,29 +884,23 @@ class CrawlEngine:
         # Independent writes are SUBMITTED CONCURRENTLY (Spark's
         # scheduler interleaves jobs from multiple driver threads at
         # task granularity): phase 1 runs the fetch write beside the
-        # link-discovery chain — they share the lazily-checkpointed
-        # `hits` (block-level locks make concurrent materialization
-        # compute-or-wait, never compute-twice) and alternate between
-        # Python-UDF-heavy and JVM-shuffle-heavy stages, so each fills
-        # the other's idle slots; phase 2 overlaps the three small
-        # bookkeeping writes (seen / tasks / lineage), which otherwise
-        # pay three sequential per-job floors (~0.2-0.5 s each — pure
-        # wave overhead that does not shrink with cores).
+        # link-discovery chain — they share the eagerly-checkpointed
+        # `hits` and alternate between Python-UDF-heavy and
+        # JVM-shuffle-heavy stages, so each fills the other's idle
+        # slots; phase 2 overlaps the three small bookkeeping writes
+        # (seen / tasks / lineage), which otherwise pay three
+        # sequential per-job floors (~0.2-0.5 s each — pure wave
+        # overhead that does not shrink with cores).
         def _job_fetches() -> int:
             fetch_rows.write.parquet(self._dir("fetches", wave_id))
             return int(obs_f.get["n_ok"] or 0)
 
         n_found = n_inserted = 0
-        wrote: List[str] = ["fetches", "metrics"]
+        wrote: List[str] = ["fetches", "metrics", "lineage"]
 
         def _job_requests() -> None:
             # M3 CollectRequests (+ M6 InstrumentMedia) per wave;
             # sub-resources belong to the RENDERED document -> final url
-            from pycrawler_spark.operators.requests import (
-                derive_requests,
-                instrument_media,
-            )
-
             reqs = derive_requests(hits.withColumn("url", F.col("url_final")))
             if cfg.instrument_media:
                 reqs = instrument_media(reqs)
@@ -958,12 +912,8 @@ class CrawlEngine:
         fut_requests = pool.submit(_job_requests) if cfg.collect_requests else None
         if cfg.collect_requests:
             wrote.append("requests")
-        if depth < cfg.depth and cfg.recursive:
-            tasks_dim = (
-                pre_tasks_dim
-                if pre_tasks_dim is not None
-                else self._read("tasks", [max(self._committed(m, "tasks"))])
-            )
+        fut_frontier = fut_seen = fut_tasks = None
+        if collect_links:
             # seen-history plan choice (see relevant_seen): while the
             # accumulated history is smaller than ~a wave's worth of
             # candidates, the candidate-key distinct + semi-join is a
@@ -982,21 +932,16 @@ class CrawlEngine:
                 hits.withColumn("links", F.col("pf.links")),
                 tasks_dim, cfg, self.adult_sites, self.url_filters,
             )
-            if use_semi or trace_on:
+            if use_semi:
                 # cache: with the semi-join (and possibly bloom) on,
-                # the candidate pipeline (urljoin + PSL parse pandas
-                # UDFs) has 2-3 consumers; with them off the kernel
-                # cogroup is the ONLY consumer and a cache write of the
-                # wave's biggest intermediate would be pure overhead
+                # the candidate pipeline has 2-3 consumers; with them
+                # off the kernel cogroup is the ONLY consumer and a
+                # cache write of the wave's biggest intermediate would
+                # be pure overhead
                 cands = cands.cache()
-            seen_all = (
-                pre_seen
-                if pre_seen is not None
-                else self._read("seen", self._committed(m, "seen"))
-            )
             if seen_all is None:
                 seen_all = empty_df(self.spark, "task_id long, url_norm string")
-            elif use_scheduler and "sbucket" in seen_all.columns:
+            elif cfg.sub_waves and "sbucket" in seen_all.columns:
                 # politeness sub-waves touch a subset of tasks: prune
                 # the persistent seen read to the task buckets present
                 # in THIS wave (directory-partition pruning — the scan
@@ -1026,9 +971,6 @@ class CrawlEngine:
                 use_semi=use_semi,
                 fpp=cfg.bloom_fpp,
             )
-            trace("seen_rel defined")
-            if trace_on:
-                trace(f"cands materialized ({cands.count()})")
             # EAGER: materialize the kernel output once, up front —
             # its three consumers (frontier / seen / tasks writes) then
             # all run CONCURRENTLY from finished blocks. Lazy here made
@@ -1036,11 +978,8 @@ class CrawlEngine:
             # seen + tasks writes queued behind it (~1 s of tail at 8
             # cores).
             kout = dedup_budget_kernel(cands, seen_rel, cfg).localCheckpoint(eager=True)
-            if trace_on:
-                trace(f"kernel materialized ({kout.count()})")
 
-            links = kout.filter(F.col("kind") == "link")
-            inserted = links.filter(F.col("inserted"))
+            inserted = kout.filter((F.col("kind") == "link") & F.col("inserted"))
             # per-task seq base comes from the tasks snapshot (updated
             # each wave) — no frontier-wide max-scan per wave
             bases = tasks_dim.select(
@@ -1061,13 +1000,12 @@ class CrawlEngine:
                     "from_url",
                 )
             )
+
             # hot-host salting (north rule): hash-distributing by host
             # alone would put a mega-host's entire wave in one
             # partition; the salt spreads each host over salt_buckets
             # partitions while keeping host locality for pruning
             # (Iceberg: bucket(host_buckets, host) + bucket(salt) sort)
-            from pycrawler_spark.functions.udfs import host_bucket
-
             def _job_frontier():
                 new_frontier.repartition(
                     cfg.host_buckets,
@@ -1096,8 +1034,6 @@ class CrawlEngine:
                 # write — nothing task-proportional ever reaches the
                 # driver (a 10^7-site crawl keeps a 10^7-row tasks
                 # table distributed)
-                from pyspark.sql import Observation as _Obs
-
                 agg = kout.groupBy("task_id").agg(
                     F.sum(
                         F.when(F.col("kind") == "link", 1).otherwise(0)
@@ -1106,7 +1042,7 @@ class CrawlEngine:
                         "n_ins"
                     ),
                 )
-                obs_t = _Obs()
+                obs_t = Observation()
                 jt = tasks_dim.join(agg, "task_id", "left").observe(
                     obs_t,
                     F.sum(F.coalesce(F.col("n_found"), F.lit(0))).alias("found"),
@@ -1128,14 +1064,11 @@ class CrawlEngine:
 
             fut_tasks = pool.submit(_job_tasks)
             wrote += ["frontier", "seen", "tasks"]
-        else:
-            fut_frontier = fut_seen = fut_tasks = None
 
         # phase-1 barrier: fetches (and requests) on disk
         n_hits = fut_fetch.result()
         if fut_requests is not None:
             fut_requests.result()
-        trace("fetches written")
 
         # phase 2b: per-partition (host) lineage — which host-bucket
         # produced what in this wave (resumable audit trail, north
@@ -1143,8 +1076,6 @@ class CrawlEngine:
         # columns (columnar read, html never touched): at 10^7 hosts
         # per wave this table must never pass through the driver.
         def _job_lineage():
-            from pycrawler_spark.functions.udfs import host_bucket
-
             fdf = self.spark.read.parquet(self._dir("fetches", wave_id))
             (
                 fdf.filter(F.col("repetition") == 1)
@@ -1166,22 +1097,14 @@ class CrawlEngine:
                 .write.parquet(self._dir("lineage", wave_id))
             )
 
-        fut_lin = pool.submit(_job_lineage) if cfg.lineage else None
-        if fut_frontier is not None:
-            fut_frontier.result()
-            trace("frontier written")
-        if fut_seen is not None:
-            fut_seen.result()
-            trace("seen written")
+        fut_lin = pool.submit(_job_lineage)
         if fut_tasks is not None:
+            fut_frontier.result()
+            fut_seen.result()
             n_found, n_inserted = fut_tasks.result()
-            trace("tasks written")
             kout.unpersist()
             cands.unpersist()
-        if fut_lin is not None:
-            fut_lin.result()
-            wrote.append("lineage")
-            trace("lineage written")
+        fut_lin.result()
         pool.shutdown(wait=True)
         wall = time.monotonic() - t0
         stats = {
@@ -1197,17 +1120,13 @@ class CrawlEngine:
             "urls_per_sec": round((n_sched + n_found) / max(wall, 1e-9), 1),
             "exhausted": False,
         }
-        import pandas as _pd
-
-        self._write_pandas(_pd.DataFrame([stats]), "metrics", wave_id)
-        trace("metrics written")
+        self._write_pandas(pd.DataFrame([stats]), "metrics", wave_id)
 
         if cache_hits:
             hits.unpersist()
         wave_r.unpersist()
-        if use_scheduler:
+        if cfg.sub_waves:
             wave.unpersist()
-        if use_scheduler:
             sched.unpersist()
 
         m["waves"].append(
@@ -1252,23 +1171,26 @@ class CrawlEngine:
 
     # ----- full run -----------------------------------------------------------
 
-    def run(self) -> List[Dict]:
-        """Crawl to frontier exhaustion: for each depth level, run waves
-        (politeness may need several sub-waves per depth) until no free
-        URLs remain at that depth, then descend."""
-        all_stats: List[Dict] = []
+    def waves(self) -> Iterator[Dict]:
+        """The depth loop: yield each fetch wave's stats, descending a
+        depth once it has no free URLs left. Atomic-depth mode fetches
+        a whole depth in one wave; politeness/robots mode may need
+        several sub-waves per depth. The manifest, not this generator,
+        is the crawl state, so a consumer may stop and resume it at any
+        yield (stream_crawl does, between micro-batches)."""
         depth = 0
         while depth <= self.cfg.depth:
-            while True:
-                m = self._load_manifest()
-                stats = self._run_wave(m, depth)
-                if stats.get("exhausted"):
-                    break
-                all_stats.append(stats)
-                if not (self.cfg.politeness or self.cfg.obey_robots):
-                    break  # one wave fetches the whole depth level
-            depth += 1
-        return all_stats
+            stats = self._run_wave(self._load_manifest(), depth)
+            if stats.get("exhausted"):
+                depth += 1
+                continue
+            yield stats
+            if not self.cfg.sub_waves:
+                depth += 1
+
+    def run(self) -> List[Dict]:
+        """Crawl to frontier exhaustion; returns the per-wave stats."""
+        return list(self.waves())
 
     # ----- compaction (scale hygiene; Iceberg rewrite_data_files analog) ----
 

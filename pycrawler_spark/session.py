@@ -43,6 +43,13 @@ def _package_zip() -> str:
     return out
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical RAM: in local mode the driver JVM also
+    runs every executor task, and the Python workers need the rest."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{ram_mb // 2}m"
+
+
 def get_spark(
     app_name: str = "pycrawler-spark",
     master: str | None = None,
@@ -51,7 +58,11 @@ def get_spark(
     extra_conf: dict | None = None,
     ship_package: bool = True,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = (
+        master
+        or os.environ.get("SPARK_GRAFT_MASTER")
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or len(os.sched_getaffinity(0))}]"
+    )
     if shuffle_partitions is None:
         # one-ish partition per core locally; on a real cluster pass 2-3x cores
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "8"
@@ -96,7 +107,10 @@ def get_spark(
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
             str(256 * 1024 * 1024),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.python.worker.reuse", "true")

@@ -190,14 +190,3 @@ def sync_to_iceberg(
                 _record_waves(spark, q, sorted(done | set(todo)))
             out[t] = n
     return out
-
-
-def compact_iceberg(
-    spark: SparkSession, catalog: str, db: str, table: str
-) -> None:
-    """The Iceberg-native twin of ``CrawlEngine.compact``: bin-pack
-    small per-wave files. On-cluster maintenance; no-op semantics."""
-    spark.sql(
-        f"CALL {catalog}.system.rewrite_data_files("
-        f"table => '{db}.{table}', strategy => 'binpack')"
-    )

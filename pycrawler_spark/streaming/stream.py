@@ -21,6 +21,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pycrawler_spark.plans.crawl import CrawlEngine
+from pycrawler_spark.streaming.stateful import (
+    FRONTIER_STREAM_SCHEMA,
+    apply_state_provider,
+)
 
 SEEDS_SCHEMA = "rank int, url string"
 
@@ -87,19 +91,12 @@ def stream_crawl(
     Returns the per-wave stats list (same shape as ``run()``).
     """
     spark = engine.spark
-    state = {"depth": 0, "stats": []}
+    waves = engine.waves()
+    all_stats: list = []
 
     def advance() -> None:
-        while state["depth"] <= engine.cfg.depth:
-            m = engine._load_manifest()
-            stats = engine._run_wave(m, state["depth"])
-            atomic = not (engine.cfg.politeness or engine.cfg.obey_robots)
-            if stats.get("exhausted"):
-                state["depth"] += 1
-                continue
-            state["stats"].append(stats)
-            if atomic:
-                state["depth"] += 1  # one wave fetches the whole depth
+        for stats in waves:
+            all_stats.append(stats)
             if stats.get("inserted", 0) > 0:
                 return  # the new frontier delta triggers the next batch
 
@@ -115,8 +112,6 @@ def stream_crawl(
         # manifest (not the batch) is the source of truth for which
         # wave runs — that is what makes replay after a crash safe.
         advance()
-
-    from pycrawler_spark.streaming.stateful import FRONTIER_STREAM_SCHEMA
 
     stream = (
         spark.readStream.schema(FRONTIER_STREAM_SCHEMA)
@@ -137,7 +132,7 @@ def stream_crawl(
         q.processAllAvailable()
     finally:
         q.stop()
-    return state["stats"]
+    return all_stats
 
 
 def stream_seen_filter(
@@ -166,11 +161,6 @@ def stream_seen_filter(
     for this query's start and restored after. The batch path's
     bloom+compaction remains the bulk-crawl choice (SCALE.md).
     """
-    from pycrawler_spark.streaming.stateful import (
-        FRONTIER_STREAM_SCHEMA,
-        apply_state_provider,
-    )
-
     # restore guard spans plan BUILDING too: an analysis error before
     # start() must not leak the provider into the session
     restore_provider = apply_state_provider(spark, state_store_provider)
@@ -209,8 +199,6 @@ def stream_fetch_metrics(
 ):
     """Event-time windowed fetch metrics over the engine's fetches log
     (watermarked tumbling window per host)."""
-    from pycrawler_spark.plans.crawl import FETCH_COLS  # noqa: F401
-
     fetches_glob = os.path.join(workdir, "fetches", "wave=*")
     # static schema probe (file streams need an explicit schema)
     schema = spark.read.parquet(fetches_glob).schema

@@ -143,22 +143,9 @@ def normalize_url(url: str, query: bool = True, fragment: bool = False) -> str:
 
 # --- accessors over ParsedUrl (utils.py:68-87) -------------------------
 
-def url_scheme(u: ParsedUrl) -> str:
-    return u.scheme
-
-
 def url_origin(u: ParsedUrl) -> str:
     """scheme://netloc (utils.py:71-72)."""
     return f"{u.scheme}://{u.netloc}"
-
-
-def url_site(u: ParsedUrl) -> str:
-    """Registered domain / eTLD+1 (utils.py:74-75)."""
-    return u.fld
-
-
-def url_scheme_site(u: ParsedUrl) -> str:
-    return f"{u.scheme}://{u.fld}"
 
 
 def url_str(u: ParsedUrl) -> str:

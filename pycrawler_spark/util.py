@@ -11,9 +11,6 @@ Python row lists.
 
 from __future__ import annotations
 
-from typing import Dict, List
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -25,12 +22,3 @@ def empty_df(spark: SparkSession, schema: str) -> DataFrame:
         name, typ = field.strip().split(" ", 1)
         cols.append(F.lit(None).cast(typ.strip()).alias(name))
     return spark.range(0).select(*cols)
-
-
-def one_row_df(spark: SparkSession, row: Dict) -> DataFrame:
-    """Single-row DataFrame via the Arrow/pandas path."""
-    return spark.createDataFrame(pd.DataFrame([row]))
-
-
-def rows_df(spark: SparkSession, rows: List[Dict]) -> DataFrame:
-    return spark.createDataFrame(pd.DataFrame(rows))

@@ -158,12 +158,15 @@ def test_requests_and_media(spark, tmp_path):
     assert all(not r.intercepted and r.body is None for r in other)
 
 
-def test_resume_recomputes_interrupted_wave(spark, tmp_path):
+@pytest.mark.parametrize("leftover_compact_tmp", [False, True],
+                         ids=["mid_wave", "mid_compact"])
+def test_resume_recomputes_interrupted_wave(spark, tmp_path, leftover_compact_tmp):
     """Kill-after-partial-write: drop the manifest commit of the last
-    wave, resume, re-run -> identical fetch set (T3 exactly-once)."""
+    wave, resume, re-run -> identical fetch set (T3 exactly-once). The
+    mid_compact form also dies inside a seen compaction, leaving its
+    half-written ``seen/_compact_tmp`` snapshot behind."""
     import json
     import os
-    import shutil
 
     cfg = CrawlConfig(depth=2, max_urls=20)
     eng, sim = _run_both(spark, tmp_path, cfg)
@@ -172,25 +175,27 @@ def test_resume_recomputes_interrupted_wave(spark, tmp_path):
 
     # simulate a crash during the last wave: roll the manifest back one
     # committed wave but leave its (now orphan) directories on disk
-    mpath = os.path.join(str(tmp_path / "job"), "manifest.json")
+    job = str(tmp_path / "job")
+    mpath = os.path.join(job, "manifest.json")
     m = json.load(open(mpath))
     dropped = m["waves"].pop()
     m["next_wave"] = dropped["wave_id"]
     json.dump(m, open(mpath, "w"))
+    compact_tmp = os.path.join(job, "seen", "_compact_tmp")
+    if leftover_compact_tmp:
+        os.makedirs(compact_tmp)
+        with open(os.path.join(compact_tmp, "part-00000.parquet"), "wb") as f:
+            f.write(b"PAR1 truncated")
 
-    eng2 = CrawlEngine(spark, str(tmp_path / "job"), cfg.copy(), job="t")
+    eng2 = CrawlEngine(spark, job, cfg.copy(), job="t")
     eng2.resume()
     for t in dropped["tables"]:
         assert not os.path.isdir(
-            os.path.join(str(tmp_path / "job"), t, f"wave={dropped['wave_id']:05d}")
+            os.path.join(job, t, f"wave={dropped['wave_id']:05d}")
         )
+    assert not os.path.exists(compact_tmp)
     # continue the crawl from the rolled-back state
-    depth = dropped["depth"]
-    while depth <= cfg.depth:
-        m2 = eng2._load_manifest()
-        s = eng2._run_wave(m2, depth)
-        if s.get("exhausted"):
-            depth += 1
+    eng2.run()
     after = {(r.task_id, r.url, r.depth, r.repetition, r.code)
              for r in eng2.table("fetches").collect()}
     assert after == before

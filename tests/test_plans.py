@@ -117,6 +117,7 @@ def test_candidate_pipeline_prunes_html(spark, tmp_path):
     """Slim candidate columns only — html must not survive past the
     extraction project into the shuffle toward the kernel."""
     from pycrawler_spark.config import CrawlConfig
+    from pycrawler_spark.functions.udfs import page_features_resolve_slim_udf
     from pycrawler_spark.operators.links import candidate_links
     from pycrawler_spark.plans.crawl import CrawlEngine
     from pycrawler_spark.sources.corpus import write_corpus
@@ -130,7 +131,10 @@ def test_candidate_pipeline_prunes_html(spark, tmp_path):
     frontier = eng._read("frontier", [0])
     wave = frontier.filter("depth = 0 and repetition = 1")
     pages = spark.read.parquet(pages_p).select("url", "html")
-    hits = pages.join(F.broadcast(wave), "url", "inner")
+    hits = pages.join(F.broadcast(wave), "url", "inner").withColumn(
+        "links",
+        page_features_resolve_slim_udf(F.col("html"), F.col("url"))["links"],
+    )
     tasks = eng._read("tasks", [0])
     cands = candidate_links(hits, tasks, CrawlConfig(depth=1))
     # the kernel input schema is slim — no binary column anywhere
