@@ -4,6 +4,9 @@ Mirrors the knobs of the reference's ``Config`` class
 (/root/reference/config-example.py:6-63) that affect *data semantics*.
 Browser/process knobs (DEVICE, HEADLESS, RESTART_BROWSER, ...) have no
 analog in a corpus-driven Spark engine and are intentionally absent.
+BREADTHFIRST and FORCE_COLLECT are fixed at the reference defaults:
+crawl order is insertion order either way (database.py:257-285), and a
+corpus miss has no page to collect links from.
 """
 
 from __future__ import annotations
@@ -15,9 +18,6 @@ from dataclasses import dataclass
 class CrawlConfig:
     # -- discovery semantics (config-example.py:35-43) -----------------
     recursive: bool = True          # RECURSIVE: collect links while crawling
-    breadth_first: bool = True      # BREADTHFIRST (crawl order is insertion
-                                    # order either way; see database.py:257-285)
-    force_collect: bool = False     # FORCE_COLLECT: collect links on failed loads
     same_scheme: bool = True        # SAME_SCHEME   (F3)
     same_origin: bool = False       # SAME_ORIGIN   (F4)
     same_etldp1: bool = True        # SAME_ETLDP1   (F5)
@@ -81,28 +81,10 @@ class CrawlConfig:
     host_buckets: int = 32          # hash-partition count for host-keyed state
     broadcast_wave_max_rows: int = 2_000_000  # broadcast fetch-wave side of the
                                     # corpus join below this size, else shuffle
-    # waves smaller than this get a round-robin repartition of the
-    # JOINED rows before the extraction UDF: a small wave's matched
-    # pages land unevenly on the corpus scan's partitions and the
-    # Python-heavy stage straggles (measured: ~30% idle tail at 8
-    # cores). The shuffle moves only wave-matched html (wave-sized,
-    # never corpus-sized); big waves have law-of-large-numbers balance
-    # across thousands of scan partitions and skip the extra exchange.
-    udf_balance_max_rows: int = 200_000
-    # hot-host salting: frontier and compaction writes spread each host
-    # over this many partitions, so a mega-host never lands in one
-    salt_buckets: int = 16
-    bloom_fpp: float = 0.01
     # directory-partition fan-out of the persistent seen table
     # (sbucket = task_id mod seen_buckets); politeness sub-waves prune
     # their seen read to the buckets of the tasks they schedule
     seen_buckets: int = 16
-    # seen deltas skip the per-wave dedup shuffle (consumers are
-    # duplicate-idempotent), so duplicate keys accumulate between
-    # compactions. When cumulative delta rows exceed this multiple of
-    # the distinct lower bound (frontier inserts), run() compacts the
-    # seen table early to re-bound the per-wave scan. 0 disables.
-    seen_compact_ratio: float = 3.0
     # below this persistent-seen size the exact semi-join alone beats
     # building + broadcasting a bloom each wave
     bloom_auto_threshold: int = 50_000

@@ -53,9 +53,10 @@ def pagerank(
     # union and the degree-annotated edge table below each consume the
     # edge list, and Spark plans every consumer as a separate physical
     # subtree — without this checkpoint the (possibly UDF-heavy)
-    # upstream pipeline executes four times during setup. ``ed`` is
-    # unreferenced once ``nodes`` and ``e`` are checkpointed, so its
-    # blocks are reclaimed by the ContextCleaner after setup.
+    # upstream pipeline executes four times during setup. ``ed`` is a
+    # local of this function, so its blocks stay resident beside
+    # ``e``'s (two edge copies) until ``pagerank()`` returns; only then
+    # can the ContextCleaner reclaim them.
     ed = edges.select(src_col, dst_col).localCheckpoint()
     deg = ed.groupBy(src_col).agg(F.count("*").alias("outdeg"))
     # dangling flag computed ONCE at setup (it is a static property of

@@ -11,23 +11,24 @@ Two-stage design (SURVEY.md §4 "custom engine code"):
    Scales with the wave, shuffles only slim columns (html never
    leaves the fetch stage).
 
-2. **Sequential per-task kernel** (:func:`dedup_budget_kernel`): the
-   reference's intra-site loop state — URL-seen membership
-   (database.py:287-291), MAX_URLS budget burn
-   (CollectUrls.py:139-141: decremented by links *found*, before
-   truncation), FIRST_AND_LAST split + shuffle (CollectUrls.py:119-127)
-   and insertion order — is inherently serial per site. It runs as a
-   ``cogroup(task).applyInPandas`` over (candidates, relevant-seen):
-   per-task work is bounded by one wave's discoveries for that site,
-   and tasks process in parallel — the reference's
-   one-process-per-site parallelism (main.py:123-140), Spark-shaped.
+2. **Per-task kernel** (:func:`dedup_budget_kernel`): the reference's
+   intra-site loop state — URL-seen membership (database.py:287-291),
+   MAX_URLS budget burn (CollectUrls.py:139-141: decremented by links
+   *found*, before truncation), FIRST_AND_LAST split + shuffle
+   (CollectUrls.py:119-127) and insertion order — has serial
+   semantics per site. It runs as a ``cogroup(task).applyInPandas``
+   over (candidates, relevant-seen) whose body evaluates that serial
+   loop exactly as whole-frame pandas/numpy column ops: per-task work
+   is bounded by one wave's discoveries for that site, and tasks
+   process in parallel — the reference's one-process-per-site
+   parallelism (main.py:123-140), Spark-shaped.
 """
 
 from __future__ import annotations
 
-import hashlib
 from typing import Callable, List, Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -85,8 +86,9 @@ def candidate_links(
     extra Arrow pass. The simulator twin takes plain-Python
     ``Callable[[ParsedUrl], bool]`` filters for parity testing.
 
-    Returns the kernel input: parent rows (kind='parent', pos=-1) plus
-    surviving link rows (kind='link') with normalized keys.
+    Returns the kernel input: one parent row per fetched page
+    (kind='parent', pos=-1, so it sorts first in its group) plus
+    surviving link rows (kind='link') with normalized keys and skey.
     """
     final_norm = F.col("final_norm") if "final_norm" in hits.columns else F.col("url_norm")
     parents = hits.select(
@@ -146,157 +148,77 @@ def candidate_links(
     )
 
 
-# test hook: force the exact sequential fold even when the vectorized
-# fast path would apply (equivalence tests drive both paths on the
-# same data)
-FORCE_SLOW_KERNEL = False
-
-
-def _shuffle_key(seed: str, url: str) -> str:
-    return hashlib.md5((seed + url).encode("utf-8")).hexdigest()[:16]
-
-
 def dedup_budget_kernel(
     candidates: DataFrame, seen_rel: DataFrame, cfg: CrawlConfig
 ) -> DataFrame:
-    """Sequential per-task core (see module docstring).
+    """Per-task core (see module docstring).
 
     Emits, per task: kind='self' rows (page self-seen additions,
     CollectUrls.py:46-49) and kind='link' rows for every *found* link
     (added to seen whether or not inserted — CollectUrls.py:105-111 vs
     :131), with ``inserted`` marking budget survivors and
     ``order_rank`` their insertion order within the wave.
+
+    The reference's serial per-parent loop is evaluated as whole-frame
+    column ops, exact whether or not the budget runs out:
+
+    - in ``(parent_seq, pos)`` order each parent row opens its group,
+      so "already seen" is "in the persistent set OR duplicated earlier
+      in the frame";
+    - the budget left when a group starts is ``max(0, budget - links
+      found by earlier groups)``. A group starting below 1 is skipped
+      whole (CollectUrls.py:39-40, before self-seen), and so is every
+      later group because the budget never grows — so dedup over the
+      whole frame, skipped groups included, never changes a live row;
+    - within a live group the found links take the O5 order
+      ``(first_and_last split, skey, pos)``, and the first ``before``
+      of them are inserted (CollectUrls.py:119-141).
     """
-    seed = cfg.shuffle_seed
     first_and_last = cfg.first_and_last
+    out_cols = [f.name for f in KERNEL_SCHEMA.fields]
 
     def kernel(key, cand: pd.DataFrame, seen_pdf: pd.DataFrame) -> pd.DataFrame:
-        has_skey = "skey" in cand.columns
-        task_id = int(key[0])
-        out: List[tuple] = []
         if not len(cand):
-            return pd.DataFrame(out, columns=[f.name for f in KERNEL_SCHEMA.fields])
-        budget = int(cand["budget"].iloc[0])
-        rank = 0
+            return pd.DataFrame([], columns=out_cols)
+        budget = int(cand["budget"].iat[0])
         cand = cand.sort_values(["parent_seq", "pos"], kind="mergesort")
-        # ---- vectorized fast path: budget provably cannot exhaust ----
-        # When budget > total link rows, no group is ever skipped and
-        # every deduped link is inserted, so the whole sequential fold
-        # collapses into pandas column ops: the seen-insertion order is
-        # exactly frame order (parents sort before their links), so
-        # "already seen" == "in the persistent set OR duplicated
-        # earlier in the frame". Equivalence with the loop below is
-        # pinned by test_kernel_fast_path_matches_loop + parity suite.
-        links_mask = cand["kind"] != "parent"
-        parents_df = cand[~links_mask]
-        if (
-            not FORCE_SLOW_KERNEL
-            and has_skey
-            and budget > int(links_mask.sum())
-            and len(parents_df)
-            and not parents_df["parent_seq"].duplicated().any()
-            and set(cand["parent_seq"].unique())
-            == set(parents_df["parent_seq"].unique())
-            # the fast path assumes each parent sorts BEFORE its links
-            # (parent pos=-1 < link pos>=0 from posexplode); a
-            # hand-built frame violating that would diverge from the
-            # fold's "first row must be the parent" group check, so it
-            # must take the exact path instead
-            and bool((parents_df["pos"] < 0).all())
-            and bool((cand.loc[links_mask, "pos"] >= 0).all())
-        ):
-            seen0 = (
-                cand["url_norm"].isin(set(seen_pdf["url_norm"]))
-                if len(seen_pdf)
-                else pd.Series(False, index=cand.index)
-            )
-            dup = seen0 | cand["url_norm"].duplicated(keep="first")
-            fl = cand[links_mask & ~dup].copy()
-            n_g = fl.groupby("parent_seq")["pos"].transform("size")
-            idx_g = fl.groupby("parent_seq").cumcount()
-            if first_and_last:
-                head = (n_g * 0.15).astype(int)
-                tail = (n_g * 0.85).astype(int)
-                gof = ((idx_g >= head) & (idx_g < tail)).astype(int)
-            else:
-                gof = pd.Series(0, index=fl.index)
-            fl = fl.assign(_gof=gof).sort_values(
-                ["parent_seq", "_gof", "skey", "pos"], kind="mergesort"
-            )
-            parent_url = parents_df.set_index("parent_seq")["url"]
-            self_rows = pd.DataFrame(
-                {
-                    "task_id": task_id,
-                    "kind": "self",
-                    "url": parents_df["url"].values,
-                    "url_norm": parents_df["url_norm"].values,
-                    "host": None,
-                    "from_url": None,
-                    "order_rank": 0,
-                    "inserted": False,
-                }
-            )
-            link_rows = pd.DataFrame(
-                {
-                    "task_id": task_id,
-                    "kind": "link",
-                    "url": fl["url"].values,
-                    "url_norm": fl["url_norm"].values,
-                    "host": fl["host"].values,
-                    "from_url": fl["parent_seq"].map(parent_url).values,
-                    "order_rank": range(1, len(fl) + 1),
-                    "inserted": True,
-                }
-            )
-            res = pd.concat([self_rows, link_rows], ignore_index=True)
-            return res[[f.name for f in KERNEL_SCHEMA.fields]].astype(
-                {"task_id": "int64", "order_rank": "int64"}
-            )
-        # ---- exact sequential fold (budget may exhaust) ----
-        seen = set(seen_pdf["url_norm"]) if len(seen_pdf) else set()
-        for parent_seq, grp in cand.groupby("parent_seq", sort=True):
-            first = grp.iloc[0]
-            if first["kind"] != "parent":
-                # parent row missing (shouldn't happen) -> skip group
-                continue
-            if budget < 1:  # CollectUrls.py:39-40 (before self-seen)
-                continue
-            parent_url, parent_norm = first["url"], first["url_norm"]
-            seen.add(parent_norm)
-            out.append((task_id, "self", parent_url, parent_norm, None,
-                        None, 0, False))
-            found: List[tuple] = []  # (url, norm, host, pos, skey)
-            for row in grp.iloc[1:].itertuples(index=False):
-                if row.url_norm in seen:
-                    continue
-                seen.add(row.url_norm)
-                found.append((
-                    row.url, row.url_norm, row.host, row.pos,
-                    # precomputed JVM-side in candidate_links; the
-                    # hashlib fallback only serves hand-built frames
-                    row.skey if has_skey else _shuffle_key(seed, row.url),
-                ))
-            n = len(found)
-            if first_and_last:  # O5 (CollectUrls.py:119-124)
-                head, tail = int(n * 0.15), int(n * 0.85)
-                grp_of = lambda i: 0 if (i < head or i >= tail) else 1
-            else:
-                grp_of = lambda i: 0
-            order = sorted(
-                range(n),
-                key=lambda i: (grp_of(i), found[i][4], found[i][3]),
-            )
-            for out_pos, i in enumerate(order):
-                url, norm, host = found[i][0], found[i][1], found[i][2]
-                ins = out_pos < max(0, budget)
-                if ins:
-                    rank += 1
-                out.append(
-                    (task_id, "link", url, norm, host, parent_url,
-                     rank if ins else 0, ins)
-                )
-            budget = max(0, budget - n)  # CollectUrls.py:139-140
-        return pd.DataFrame(out, columns=[f.name for f in KERNEL_SCHEMA.fields])
+        is_link = (cand["kind"] == "link").to_numpy()
+        found = is_link & ~(
+            cand["url_norm"].isin(seen_pdf["url_norm"])
+            | cand["url_norm"].duplicated()
+        ).to_numpy()
+        starts = np.flatnonzero(~is_link)  # parent rows open the groups
+        n_found = np.add.reduceat(found.astype(np.int64), starts)
+        before = np.maximum(0, budget - (np.cumsum(n_found) - n_found))
+        group = np.cumsum(~is_link) - 1
+        keep = (found | ~is_link) & (before[group] >= 1)
+        live, group = cand[keep], group[keep]
+        is_link = is_link[keep]
+        gof = np.where(is_link, 0, -1)  # the parent stays first in its group
+        if first_and_last:  # O5 (CollectUrls.py:119-124): middle 70% last
+            i = np.arange(len(live)) - np.searchsorted(group, group) - 1
+            n = n_found[group]
+            gof[(i >= (n * 0.15).astype(int)) & (i < (n * 0.85).astype(int))] = 1
+        live = live.assign(_g=group, _gof=gof).sort_values(
+            ["_g", "_gof", "skey", "pos"], kind="mergesort"
+        )
+        group = live["_g"].to_numpy()
+        is_link = (live["kind"] == "link").to_numpy()
+        first = np.searchsorted(group, group)  # row of each group's parent
+        inserted = is_link & (np.arange(len(live)) - first - 1 < before[group])
+        url = live["url"].to_numpy()
+        return pd.DataFrame(
+            {
+                "task_id": np.int64(key[0]),
+                "kind": np.where(is_link, "link", "self"),
+                "url": url,
+                "url_norm": live["url_norm"].to_numpy(),
+                "host": live["host"].to_numpy(),
+                "from_url": np.where(is_link, url[first], None),
+                "order_rank": np.where(inserted, np.cumsum(inserted), 0),
+                "inserted": inserted,
+            }
+        )
 
     return (
         candidates.groupBy("task_id")

@@ -33,6 +33,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+# target false-positive rate of the wave's seen prefilter
+BLOOM_FPP = 0.01
+
 
 def _params(n_items: int, fpp: float) -> tuple[int, int]:
     n = max(1024, n_items)
@@ -93,7 +96,7 @@ class NumpyBloom:
 
 
 def build_bloom(
-    df: DataFrame, key_col: str, n_items: int, fpp: float = 0.01
+    df: DataFrame, key_col: str, n_items: int, fpp: float = BLOOM_FPP
 ) -> NumpyBloom:
     """Distributed Bloom build: per-partition numpy partials via
     mapInPandas, OR-merged on the driver. ``xxhash64`` runs JVM-side."""
@@ -135,7 +138,6 @@ def relevant_seen(
     key_col: str = "url_norm",
     use_bloom: bool = True,
     use_semi: bool = True,
-    fpp: float = 0.01,
 ) -> DataFrame:
     """seen ∩ candidate-keys: the only seen rows the per-task dedup
     kernel needs. Bloom prefilter first (wave-sized), exact semi-join
@@ -154,6 +156,6 @@ def relevant_seen(
     keys = candidates.select(key_col).distinct()
     if use_bloom:
         n = keys.count()
-        bloom = build_bloom(keys, key_col, n_items=max(1024, n), fpp=fpp)
+        bloom = build_bloom(keys, key_col, n_items=max(1024, n))
         seen = might_contain_filter(seen, bloom, key_col)
     return seen.join(keys, key_col, "left_semi")

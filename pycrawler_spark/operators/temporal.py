@@ -41,8 +41,8 @@ def asof_join(
 
     Skew bound: each distinct ``by`` value is ONE window partition, so
     a mega-key (every row sharing one key) serializes into a single
-    task — the same per-key sequential bound as the crawl kernel's
-    per-task fold (see ``dedup_budget_kernel``). That is the correct
+    task — the same per-key bound as the crawl kernel's per-task
+    cogroup (see ``dedup_budget_kernel``). That is the correct
     shape for host-keyed/user-keyed telemetry (key cardinality >>
     cores, per-key volume bounded by politeness/session length); for a
     corpus-scale key (e.g. ``by=lang``) pass ``chunk=N`` (seconds) —

@@ -65,6 +65,25 @@ FETCH_COLS = [
 ]
 
 
+# waves smaller than this get a round-robin repartition of the JOINED
+# rows before the extraction UDF: a small wave's matched pages land
+# unevenly on the corpus scan's partitions and the Python-heavy stage
+# straggles (measured: ~30% idle tail at 8 cores). The shuffle moves
+# only wave-matched html (wave-sized, never corpus-sized); big waves
+# have law-of-large-numbers balance across thousands of scan partitions
+# and skip the extra exchange.
+UDF_BALANCE_MAX_ROWS = 200_000
+# hot-host salting: frontier, seen and compaction writes spread each
+# host over this many partitions, so a mega-host never lands in one
+SALT_BUCKETS = 16
+# seen deltas skip the per-wave dedup shuffle (consumers are
+# duplicate-idempotent), so duplicate keys accumulate between
+# compactions. When cumulative delta rows exceed this multiple of the
+# distinct lower bound (frontier inserts), the seen table is compacted
+# early to re-bound the per-wave scan.
+SEEN_COMPACT_RATIO = 3.0
+
+
 def _pageless_rows(rows: DataFrame, wave_id: int, code: int, chain: Column) -> DataFrame:
     """Fetch rows (FETCH_COLS minus repetition) for scheduled URLs that
     yielded no page — corpus misses and robots-blocked URLs: the
@@ -81,6 +100,16 @@ def _pageless_rows(rows: DataFrame, wave_id: int, code: int, chain: Column) -> D
         null("has_login_form", "boolean"), null("has_cookie_banner", "boolean"),
         chain.alias("redirect_chain"), null("body_sha256"), null("resheaders"),
     )
+
+
+def _release(df: DataFrame) -> None:
+    """Drop a frame's cached plan and, for a local checkpoint, its
+    blocks: ``unpersist()`` alone leaves a checkpoint's RDD persisted
+    until the driver happens to garbage-collect it."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()  # noqa: SLF001
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -214,7 +243,7 @@ class CrawlEngine:
             # opens few files (total files = seen_buckets x salt, not
             # partitions x buckets) while a mega-task still spreads
             # over `salt` parallel slots
-            salt = max(2, cfg.salt_buckets // 4)
+            salt = max(2, SALT_BUCKETS // 4)
             out = out.repartition(
                 cfg.host_buckets,
                 "sbucket",
@@ -635,21 +664,26 @@ class CrawlEngine:
     # ----- one wave ---------------------------------------------------------
 
     def _run_wave(self, m: Dict, depth: int) -> Dict:
-        # A failed wave must leave no background writer threads alive:
-        # the wave body forks fetch/frontier/seen/tasks writers onto a
-        # thread pool, and an exception between submit and the success
-        # path's shutdown would otherwise let orphan writers keep
+        # Everything the wave body holds — its writer pool and every
+        # cached or checkpointed frame — goes into ``held`` and is
+        # released HERE, on success and failure alike. Writers stop
+        # first (cancelling queued jobs): an orphan writer would keep
         # writing wave directories while the manifest-replay retry of
-        # the SAME wave races them on the same paths.
-        pools: List = []
+        # the SAME wave races it on the same paths, and a running job
+        # may still read a held frame. Nothing the wave cached stays
+        # registered for the retry to pile onto.
+        held: List = []
         try:
-            return self._run_wave_body(m, depth, pools)
-        except BaseException:
-            for pool in pools:
-                pool.shutdown(wait=True, cancel_futures=True)
-            raise
+            return self._run_wave_body(m, depth, held)
+        finally:
+            for h in held:
+                if isinstance(h, ThreadPoolExecutor):
+                    h.shutdown(wait=True, cancel_futures=True)
+            for h in reversed(held):  # dependent frames before their inputs
+                if isinstance(h, DataFrame):
+                    _release(h)
 
-    def _run_wave_body(self, m: Dict, depth: int, _pools: List) -> Dict:
+    def _run_wave_body(self, m: Dict, depth: int, held: List) -> Dict:
         cfg = self.cfg
         wave_id = m["next_wave"]
         t0 = time.monotonic()
@@ -708,12 +742,11 @@ class CrawlEngine:
             wave = sched.filter(F.col("granted")).select(
                 "task_id", "url", "url_norm", "host", "depth", "seq", "from_url"
             ).cache()
+            held += [sched, wave]
             blocked = sched.filter(F.col("blocked"))
             n_sched = wave.count()
             n_blocked = blocked.count()
             if n_sched == 0 and n_blocked == 0:
-                wave.unpersist()
-                sched.unpersist()
                 return {"wave_id": wave_id, "depth": depth, "scheduled": 0,
                         "blocked": 0, "exhausted": True}
 
@@ -736,6 +769,7 @@ class CrawlEngine:
         # wave side, or the fetch join itself) materializes it — an
         # eager checkpoint here would be one more sequential job floor
         wave_r = self._resolve_targets(wave, closure).localCheckpoint(eager=False)
+        held.append(wave_r)
         pages_raw = self._read_pages()
         # K1 fidelity: the reference persists response headers per
         # fetch (SaveURL.py:71-72 resheaders JSON). A stored-page
@@ -781,9 +815,9 @@ class CrawlEngine:
         else:
             pf_col = page_features_nolinks_udf(F.col("html"))
         joined = pages.join(wave_b, "url_final", "inner")
-        if n_sched < cfg.udf_balance_max_rows:
+        if n_sched < UDF_BALANCE_MAX_ROWS:
             # balance the Python-heavy extraction stage for small
-            # waves (see config.udf_balance_max_rows); the UDF sits in
+            # waves (see UDF_BALANCE_MAX_ROWS); the UDF sits in
             # the projection ABOVE this exchange, so it runs on the
             # balanced side
             joined = joined.repartition(
@@ -808,7 +842,7 @@ class CrawlEngine:
         # race to materialize the same partitions (correct but noisy:
         # the loser's accumulator updates land on a cleaned-up job).
         pool = ThreadPoolExecutor(max_workers=5)
-        _pools.append(pool)  # cleaned up by _run_wave on any failure
+        held.append(pool)
         cache_hits = collect_links or cfg.collect_requests
         if cache_hits:
             # the eager checkpoint is EXECUTOR work (the wave's fused
@@ -823,6 +857,7 @@ class CrawlEngine:
                 )
                 seen_all = self._read("seen", self._committed(m, "seen"))
             hits = fut_ck.result()
+            held.append(hits)
         # miss = requested url absent from corpus (chain empty) OR the
         # chain dead-ended on a target absent from corpus (chain kept)
         misses = wave_r.join(
@@ -939,6 +974,7 @@ class CrawlEngine:
                 # cache write of the wave's biggest intermediate would
                 # be pure overhead
                 cands = cands.cache()
+                held.append(cands)
             if seen_all is None:
                 seen_all = empty_df(self.spark, "task_id long, url_norm string")
             elif cfg.sub_waves and "sbucket" in seen_all.columns:
@@ -969,7 +1005,6 @@ class CrawlEngine:
                 cands,
                 use_bloom=seen_estimate > cfg.bloom_auto_threshold,
                 use_semi=use_semi,
-                fpp=cfg.bloom_fpp,
             )
             # EAGER: materialize the kernel output once, up front —
             # its three consumers (frontier / seen / tasks writes) then
@@ -978,6 +1013,7 @@ class CrawlEngine:
             # seen + tasks writes queued behind it (~1 s of tail at 8
             # cores).
             kout = dedup_budget_kernel(cands, seen_rel, cfg).localCheckpoint(eager=True)
+            held.append(kout)
 
             inserted = kout.filter((F.col("kind") == "link") & F.col("inserted"))
             # per-task seq base comes from the tasks snapshot (updated
@@ -1003,14 +1039,14 @@ class CrawlEngine:
 
             # hot-host salting (north rule): hash-distributing by host
             # alone would put a mega-host's entire wave in one
-            # partition; the salt spreads each host over salt_buckets
+            # partition; the salt spreads each host over SALT_BUCKETS
             # partitions while keeping host locality for pruning
             # (Iceberg: bucket(host_buckets, host) + bucket(salt) sort)
             def _job_frontier():
                 new_frontier.repartition(
                     cfg.host_buckets,
                     host_bucket(F.col("host"), cfg.host_buckets),
-                    F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)),
+                    F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)),
                 ).write.parquet(self._dir("frontier", wave_id))
 
             fut_frontier = pool.submit(_job_frontier)
@@ -1102,10 +1138,7 @@ class CrawlEngine:
             fut_frontier.result()
             fut_seen.result()
             n_found, n_inserted = fut_tasks.result()
-            kout.unpersist()
-            cands.unpersist()
         fut_lin.result()
-        pool.shutdown(wait=True)
         wall = time.monotonic() - t0
         stats = {
             "wave_id": wave_id,
@@ -1121,13 +1154,6 @@ class CrawlEngine:
             "exhausted": False,
         }
         self._write_pandas(pd.DataFrame([stats]), "metrics", wave_id)
-
-        if cache_hits:
-            hits.unpersist()
-        wave_r.unpersist()
-        if cfg.sub_waves:
-            wave.unpersist()
-            sched.unpersist()
 
         m["waves"].append(
             {"wave_id": wave_id, "depth": depth, "kind": "fetch",
@@ -1148,18 +1174,15 @@ class CrawlEngine:
         (redirected parents sharing a final url, re-sightings across
         waves) accumulate and inflate every later wave's seen scan +
         bloom build. When cumulative delta rows exceed
-        ``seen_compact_ratio`` x the distinct lower bound (frontier
+        ``SEEN_COMPACT_RATIO`` x the distinct lower bound (frontier
         inserts — each inserted exactly once), compact just the seen
         table to re-bound the growth between full compactions."""
-        ratio = self.cfg.seen_compact_ratio
-        if not ratio:
-            return
         waves = [w for w in m["waves"] if "seen" in w.get("tables", [])]
         if len(waves) <= 1:
             return
         rows = sum(w.get("seen_rows", 0) for w in m["waves"])
         distinct_lb = sum(w.get("n_inserted", 0) for w in m["waves"])
-        if rows > ratio * max(1, distinct_lb):
+        if rows > SEEN_COMPACT_RATIO * max(1, distinct_lb):
             out = self.compact(tables=("seen",))
             # reset the counter to the actual post-compaction row count
             # so the heuristic measures growth SINCE this compaction
@@ -1229,7 +1252,7 @@ class CrawlEngine:
             writer = df.repartition(
                 self.cfg.host_buckets,
                 F.col(key),
-                F.pmod(F.xxhash64(salt_col), F.lit(self.cfg.salt_buckets)),
+                F.pmod(F.xxhash64(salt_col), F.lit(SALT_BUCKETS)),
             ).write.mode("overwrite")
             if "sbucket" in df.columns:
                 # seen: keep the directory-partitioned layout so the

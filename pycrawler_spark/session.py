@@ -85,10 +85,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let the planner pick a shuffled-hash join when its size
         # conditions hold (guide: SHJ skips the per-partition sort and
-        # is usually faster when one side is moderately small; Spark
-        # still falls back to sort-merge when neither side can build a
-        # local hash map, so the spill-safety of SMJ is kept for the
-        # giant-x-giant joins). Measured r6, interleaved medians at
+        # is usually faster when one side is moderately small). Spark
+        # falls back to sort-merge when neither side can build a local
+        # hash map — but it decides that from Catalyst's size
+        # estimates, so SMJ's spill-safety holds only when those are
+        # right. After explode/UDF stages they often are not, and a
+        # hash build side picked on a low estimate can OOM where
+        # sort-merge would spill. Measured r6, interleaved medians at
         # sf0.1: q12 0.95->0.69 s, q58 1.53->1.37 s, q54 3.22->2.86 s,
         # no query slower.
         .config("spark.sql.join.preferSortMergeJoin", "false")

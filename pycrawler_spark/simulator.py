@@ -131,7 +131,7 @@ def _collect_urls(
     # page self-seen (CollectUrls.py:46-49)
     seen.add(urlkit.seen_key(urlkit.url_str_with_query_fragment(parsed_final)))
     self_seen = True
-    if html is None and not cfg.force_collect:  # CollectUrls.py:51-54
+    if html is None:                    # CollectUrls.py:51-54
         return [], True
 
     found: List[Tuple[str, str, int]] = []
@@ -222,10 +222,9 @@ def simulate(
 
         def dequeue() -> Optional[List]:
             nonlocal cur_depth
-            if cfg.breadth_first:
-                for row in frontier:
-                    if row[3] == "free" and row[1] == cur_depth:
-                        return row
+            for row in frontier:
+                if row[3] == "free" and row[1] == cur_depth:
+                    return row
             for row in frontier:
                 if row[3] == "free":
                     return row

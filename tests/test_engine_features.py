@@ -296,43 +296,56 @@ def test_crawl_delay_caps_host_budget(spark):
     assert not a.blocked.any() and not b.blocked.any()
 
 
-def test_failed_wave_shuts_down_writer_pool(spark, tmp_path):
-    """An exception escaping the wave body must shut down the wave's
+@pytest.mark.parametrize("politeness", [False, True], ids=["atomic", "politeness"])
+def test_failed_wave_shuts_down_writer_pool(spark, tmp_path, politeness):
+    """An exception inside the wave body must shut down the wave's
     writer thread pool (cancelling queued jobs) before propagating, so
     a manifest-replay retry never races orphan background writers on
-    the same wave directories."""
-    import pytest as _pytest
-
-    from pycrawler_spark.config import CrawlConfig
-    from pycrawler_spark.plans.crawl import CrawlEngine
-    from pycrawler_spark.sources.corpus import write_corpus
+    the same wave directories. It must also release every frame the
+    wave cached or checkpointed (politeness sub-waves also cache the
+    schedule); only the job's redirect closure stays."""
+    from concurrent.futures import ThreadPoolExecutor
 
     pages_p, seeds_p, _ = write_corpus(
         str(tmp_path / "c"), seed=11, n_hosts=2, pages_per_host=4
     )
     eng = CrawlEngine(
-        spark, str(tmp_path / "job"), CrawlConfig(depth=1, max_urls=10),
+        spark, str(tmp_path / "job"),
+        CrawlConfig(depth=1, max_urls=10, politeness=politeness),
         job="poolfail",
     )
     eng.init_job(spark.read.parquet(seeds_p), pages_p)
+    closure = eng._redirect_closure()
+    if closure is not None:
+        closure.count()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    entries_before = cache_manager.numCachedEntries()
+    rdds_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     seen_pools = []
     orig = eng._run_wave_body
 
-    def failing_body(m, depth, pools):
+    def recording_body(m, depth, held):
         try:
-            return orig(m, depth, pools)
+            return orig(m, depth, held)
         finally:
-            seen_pools.extend(pools)
-            raise RuntimeError("injected wave failure")
+            seen_pools.extend(h for h in held if isinstance(h, ThreadPoolExecutor))
 
-    eng._run_wave_body = failing_body
-    with _pytest.raises(RuntimeError, match="injected wave failure"):
+    def failing_write_seen(*args):
+        raise RuntimeError("injected wave failure")
+
+    eng._run_wave_body = recording_body
+    eng._write_seen = failing_write_seen
+    with pytest.raises(RuntimeError, match="injected wave failure"):
         eng.run()
     assert seen_pools, "wave body never created a writer pool"
     for pool in seen_pools:
         # ThreadPoolExecutor._shutdown flips only via shutdown()
         assert pool._shutdown, "writer pool left running after failure"
+    assert cache_manager.numCachedEntries() == entries_before, \
+        "failed wave left a cached plan registered"
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - rdds_before
+    assert not left, f"failed wave left persisted RDDs {sorted(left)}"
 
 
 def test_manifest_records_extraction_modes(spark, tmp_path):
@@ -385,57 +398,73 @@ def test_slim_link_struct_matches_full(spark, tmp_path):
     assert run("slim", None) == run("full", [noop])
 
 
-def test_kernel_fast_path_matches_loop(spark):
-    """The vectorized no-exhaustion kernel path must emit EXACTLY the
-    sequential fold's rows (ranks included) on a frame with cross-group
-    duplicates, persistent-seen hits, and FIRST_AND_LAST ordering."""
-    import pandas as pd
+# (task_id, parent path, link names in document order): links repeat
+# within a group (a2 normalizes to a), across groups (b, c) and against
+# the persistent seen set
+_KERNEL_GROUPS = [
+    (1, "s/p0", ["a", "b", "a2", "seen"]),
+    (1, "s/p1", ["b", "c", "d", "e", "f", "g", "h"]),
+    (1, "s/p2", ["c", "i", "j"]),
+    (2, "t/p", ["x"]),
+]
+_KERNEL_BUDGETS = {"ample": 100, "mid_group": 5, "group_boundary": 2, "zero": 0}
+# "parent link:order_rank ..." per emitted group, rank 0 = found but not
+# inserted; captured from the per-row sequential fold the vectorized
+# kernel replaced
+_KERNEL_EXPECTED = {
+    ("ample", False): "s/p0 a:1 b:2 | s/p1 f:3 c:4 g:5 d:6 h:7 e:8 | s/p2 i:9 j:10 | t/p x:1",
+    ("ample", True): "s/p0 b:1 a:2 | s/p1 h:3 f:4 c:5 g:6 d:7 e:8 | s/p2 j:9 i:10 | t/p x:1",
+    ("mid_group", False): "s/p0 a:1 b:2 | s/p1 f:3 c:4 g:5 d:0 h:0 e:0 | t/p x:1",
+    ("mid_group", True): "s/p0 b:1 a:2 | s/p1 h:3 f:4 c:5 g:0 d:0 e:0 | t/p x:1",
+    ("group_boundary", False): "s/p0 a:1 b:2 | t/p x:1",
+    ("group_boundary", True): "s/p0 b:1 a:2 | t/p x:1",
+    ("zero", False): "",
+    ("zero", True): "",
+}
 
-    from pycrawler_spark.config import CrawlConfig
-    from pycrawler_spark.operators import links as L
 
+@pytest.mark.parametrize("first_and_last", [False, True], ids=["fifo", "first_and_last"])
+@pytest.mark.parametrize("budget", list(_KERNEL_BUDGETS))
+def test_kernel_matches_fold_rows(spark, budget, first_and_last):
+    """The dedup/budget kernel emits exactly the serial per-parent
+    loop's rows (self rows, found links, ranks) whether the budget is
+    ample, runs out inside a group, runs out at a group boundary or is
+    0 — with and without the FIRST_AND_LAST split. Task 3 has seen rows
+    and no candidates."""
+    from pycrawler_spark.operators.links import dedup_budget_kernel
+
+    b = _KERNEL_BUDGETS[budget]
     rows = []
-    # two parent groups; links with dups within group, across groups,
-    # and against the persistent seen set
-    rows.append((1, "parent", 0, -1, "https://s/p0", "https://s/p0", None, None, 100))
-    for i, (u, n) in enumerate([
-        ("https://s/a", "https://s/a"),
-        ("https://s/b", "https://s/b"),
-        ("https://s/a2", "https://s/a"),     # dup within group
-        ("https://s/seen", "https://s/seen"),  # in persistent seen
-    ]):
-        rows.append((1, "link", 0, i, u, n, "s", f"k{i:02d}", 100))
-    rows.append((1, "parent", 1, -1, "https://s/p1", "https://s/p1", None, None, 100))
-    for i, (u, n) in enumerate([
-        ("https://s/b", "https://s/b"),      # dup across groups
-        ("https://s/c", "https://s/c"),
-        ("https://s/d", "https://s/d"),
-        ("https://s/e", "https://s/e"),
-        ("https://s/f", "https://s/f"),
-        ("https://s/g", "https://s/g"),
-        ("https://s/h", "https://s/h"),
-    ]):
-        rows.append((1, "link", 1, i, u, n, "s", f"q{9 - i}", 100))  # reversed skeys
-    cols = "task_id long, kind string, parent_seq long, pos int, url string, url_norm string, host string, skey string, budget long"
-    cand = spark.createDataFrame(rows, cols)
-    seen = spark.createDataFrame(
-        [(1, "https://s/seen")], "task_id long, url_norm string"
+    for seq, (task, parent, links) in enumerate(_KERNEL_GROUPS):
+        host = parent.split("/")[0]
+        p = f"https://{parent}"
+        rows.append((task, "parent", seq, -1, p, p, None, None, b))
+        for pos, name in enumerate(links):
+            url = f"https://{host}/{name}"
+            rows.append((task, "link", seq, pos, url, url.rstrip("2"), host,
+                         str(pos * 3 % 10), b))
+    cand = spark.createDataFrame(
+        rows,
+        "task_id long, kind string, parent_seq long, pos int, url string, "
+        "url_norm string, host string, skey string, budget long",
     )
+    seen = spark.createDataFrame(
+        [(1, "https://s/seen"), (3, "https://u/z")], "task_id long, url_norm string"
+    )
+    got = dedup_budget_kernel(cand, seen, CrawlConfig(first_and_last=first_and_last))
 
-    def run(cfg):
-        out = L.dedup_budget_kernel(cand, seen, cfg).collect()
-        return sorted(tuple(r) for r in out)
-
-    for fal in (False, True):
-        cfg = CrawlConfig(first_and_last=fal)
-        fast = run(cfg)
-        L.FORCE_SLOW_KERNEL = True
-        try:
-            slow = run(cfg)
-        finally:
-            L.FORCE_SLOW_KERNEL = False
-        assert fast == slow, f"first_and_last={fal}"
-        assert any(r[1] == "link" and r[7] for r in fast)  # inserted links exist
+    want = []
+    for group in filter(None, _KERNEL_EXPECTED[budget, first_and_last].split(" | ")):
+        parent, *links = group.split()
+        host = parent.split("/")[0]
+        task = 1 if host == "s" else 2
+        p = f"https://{parent}"
+        want.append((task, "self", p, p, None, None, 0, False))
+        for link in links:
+            name, rank = link.split(":")
+            url = f"https://{host}/{name}"
+            want.append((task, "link", url, url, host, p, int(rank), rank != "0"))
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
 
 
 def test_priority_mode_reorders_politeness_subwaves(spark, tmp_path):

@@ -155,9 +155,10 @@ def test_exchange_reuse_in_minhash(spark):
 def test_hot_host_salting_bounds_partitions(spark):
     """90%-skewed host distribution must not serialize into one
     partition: the salted repartition spreads the mega-host over
-    salt_buckets partitions."""
+    SALT_BUCKETS partitions."""
     from pycrawler_spark.config import CrawlConfig
     from pycrawler_spark.functions.udfs import host_bucket
+    from pycrawler_spark.plans.crawl import SALT_BUCKETS
 
     cfg = CrawlConfig()
     df = spark.range(10_000).select(
@@ -169,7 +170,7 @@ def test_hot_host_salting_bounds_partitions(spark):
     salted = df.repartition(
         cfg.host_buckets,
         host_bucket(F.col("host"), cfg.host_buckets),
-        F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)),
+        F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)),
     )
     sizes = (
         salted.groupBy(F.spark_partition_id().alias("p"))
