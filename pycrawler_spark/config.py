@@ -81,10 +81,6 @@ class CrawlConfig:
     host_buckets: int = 32          # hash-partition count for host-keyed state
     broadcast_wave_max_rows: int = 2_000_000  # broadcast fetch-wave side of the
                                     # corpus join below this size, else shuffle
-    # directory-partition fan-out of the persistent seen table
-    # (sbucket = task_id mod seen_buckets); politeness sub-waves prune
-    # their seen read to the buckets of the tasks they schedule
-    seen_buckets: int = 16
     # below this persistent-seen size the exact semi-join alone beats
     # building + broadcasting a bloom each wave
     bloom_auto_threshold: int = 50_000

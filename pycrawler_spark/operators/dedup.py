@@ -18,6 +18,8 @@ from typing import List, Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from pycrawler_spark.util import release
+
 DEFAULT_SALTS = ("s1", "s2", "s3", "s4", "s5", "s6", "s7", "s8")
 
 
@@ -375,46 +377,51 @@ def dup_clusters(
         F.col(id_col).alias("id"), F.col(id_col).cast("long").alias("label")
     ).localCheckpoint()
     changed = 0
-    for _ in range(max_iters):
-        nb = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nb_label"))
-        )
-        stepped = labels.join(nb, labels["id"] == nb["src"], "left").select(
-            "id",
-            F.least(
-                F.col("label"), F.coalesce("nb_label", F.col("label"))
-            ).alias("label"),
-        )
-        # pointer jumping: label <- min(label, label(label))
-        ptr = stepped.select(
-            F.col("id").alias("p_id"), F.col("label").alias("p_label")
-        )
-        nxt = (
-            stepped.join(ptr, stepped["label"] == ptr["p_id"], "left")
-            .select(
+    try:
+        for _ in range(max_iters):
+            nb = (
+                edges.join(labels, edges["dst"] == labels["id"])
+                .groupBy("src")
+                .agg(F.min("label").alias("nb_label"))
+            )
+            stepped = labels.join(nb, labels["id"] == nb["src"], "left").select(
                 "id",
                 F.least(
-                    F.col("label"), F.coalesce("p_label", F.col("label"))
+                    F.col("label"), F.coalesce("nb_label", F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()  # truncate the iterative lineage
-        )
-        changed = (
-            nxt.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"dup_clusters did not converge in {max_iters} rounds "
-            f"({changed} labels still changing) — raise max_iters"
-        )
+            # pointer jumping: label <- min(label, label(label))
+            ptr = stepped.select(
+                F.col("id").alias("p_id"), F.col("label").alias("p_label")
+            )
+            nxt = (
+                stepped.join(ptr, stepped["label"] == ptr["p_id"], "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("label"), F.coalesce("p_label", F.col("label"))
+                    ).alias("label"),
+                )
+                .localCheckpoint()  # truncate the iterative lineage
+            )
+            changed = (
+                nxt.alias("n")
+                .join(labels.alias("o"), "id")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            release(labels)
+            labels = nxt
+            if changed == 0:
+                break
+        if changed != 0:
+            release(labels)
+            raise RuntimeError(
+                f"dup_clusters did not converge in {max_iters} rounds "
+                f"({changed} labels still changing) — raise max_iters"
+            )
+    finally:
+        release(edges)
     return labels.select(
         F.col("id").alias(id_col),
         F.col("label").alias("cluster_id"),

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pycrawler_spark.util import release
+
 
 def pagerank(
     edges: DataFrame,
@@ -53,10 +55,9 @@ def pagerank(
     # union and the degree-annotated edge table below each consume the
     # edge list, and Spark plans every consumer as a separate physical
     # subtree — without this checkpoint the (possibly UDF-heavy)
-    # upstream pipeline executes four times during setup. ``ed`` is a
-    # local of this function, so its blocks stay resident beside
-    # ``e``'s (two edge copies) until ``pagerank()`` returns; only then
-    # can the ContextCleaner reclaim them.
+    # upstream pipeline executes four times during setup. ``ed`` is
+    # released as soon as ``e`` (the degree-annotated copy every round
+    # reads) is materialized, so two edge copies never outlive setup.
     ed = edges.select(src_col, dst_col).localCheckpoint()
     deg = ed.groupBy(src_col).agg(F.count("*").alias("outdeg"))
     # dangling flag computed ONCE at setup (it is a static property of
@@ -79,6 +80,7 @@ def pagerank(
         ed.join(deg, src_col)
         .localCheckpoint()
     )
+    release(ed)
     ranks = nodes.select("node", "_dang", F.lit(1.0 / n).alias("rank"))
     for _ in range(iters):
         # ONE join + ONE aggregation per round (r6): zero-inflow nodes
@@ -114,6 +116,7 @@ def pagerank(
         dangling = ranks.filter(F.col("_dang")).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dmass")
         )
+        prev = ranks
         ranks = (
             agg.crossJoin(F.broadcast(dangling))
             .select(
@@ -127,6 +130,10 @@ def pagerank(
             )
             .localCheckpoint()
         )
+        release(prev)
+    release(e)
+    if iters:  # with no rounds the result still reads ``nodes``
+        release(nodes)
     return ranks.select("node", "rank")
 
 

@@ -1,13 +1,14 @@
 """Multimodal binary-column operators (training-data pipeline).
 
-Image/audio/video payloads are opaque ``binary`` columns with typed
-metadata, processed batch-wise via ``mapInPandas`` (Arrow transfer,
-bounded batches — never a row-at-a-time Python UDF). The decode
-kernels themselves are STUBBED behind :data:`REAL_DECODERS` because
-no image/audio library ships in this container; the Spark-side
-contract — schemas, batch shapes, partitioning, null handling — is
-real and tested. Swapping in Pillow/libav later changes only the
-kernel body.
+Image/audio/video payloads are opaque ``binary`` columns. Input rows
+carry ``media_id`` (long), ``kind`` (image | audio | video) and
+``payload`` (binary) and are processed batch-wise via ``mapInPandas``
+(Arrow transfer, bounded batches — never a row-at-a-time Python UDF).
+Images decode with Pillow when it is installed (``HAVE_PILLOW``);
+audio/video have no decoder library, so their kernels are stubs. The
+Spark-side contract — schemas, batch shapes, partitioning, null
+handling — is real and tested. Swapping in libav later changes only
+the kernel body.
 
 A deterministic fake decoder (``fake=True``) derives pseudo features
 from the payload bytes so pipelines are testable end-to-end.
@@ -20,18 +21,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("kind", T.StringType()),       # image | audio | video
-        T.StructField("content_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
+from pyspark.sql import DataFrame, functions as F
 
 FEATURES_SCHEMA = (
     "media_id long, kind string, width int, height int, n_frames int, "

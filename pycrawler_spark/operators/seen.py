@@ -3,8 +3,8 @@
 The reference keeps a per-task Python ``set`` of normalized URLs
 (database.py:254-255, 287-291) pickled into ``task.crawlerstate``.
 This engine persists the seen set as a columnar table
-``seen(task_id, url_norm, h)`` (host-bucketed parquet/Iceberg) and
-uses a Bloom filter only as a *prefilter* — never as the source of
+``seen(task_id, url_norm)`` (one flat parquet delta per wave, which may
+repeat keys) and uses a Bloom filter only as a *prefilter* — never as the source of
 truth, because a Bloom false positive would DROP a URL the reference
 keeps and break seen-set parity (SURVEY.md §7 hard part #2).
 

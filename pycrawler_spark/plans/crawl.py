@@ -53,7 +53,7 @@ from pycrawler_spark.operators.links import candidate_links, dedup_budget_kernel
 from pycrawler_spark.operators.requests import derive_requests, instrument_media
 from pycrawler_spark.operators.scheduler import schedule_wave
 from pycrawler_spark.operators.seen import relevant_seen
-from pycrawler_spark.util import empty_df
+from pycrawler_spark.util import empty_df, release
 
 REDIRECT_T = "array<struct<url:string,code:int,location:string>>"
 
@@ -73,15 +73,9 @@ FETCH_COLS = [
 # have law-of-large-numbers balance across thousands of scan partitions
 # and skip the extra exchange.
 UDF_BALANCE_MAX_ROWS = 200_000
-# hot-host salting: frontier, seen and compaction writes spread each
-# host over this many partitions, so a mega-host never lands in one
+# hot-host salting: frontier and compaction writes spread each host
+# over this many partitions, so a mega-host never lands in one
 SALT_BUCKETS = 16
-# seen deltas skip the per-wave dedup shuffle (consumers are
-# duplicate-idempotent), so duplicate keys accumulate between
-# compactions. When cumulative delta rows exceed this multiple of the
-# distinct lower bound (frontier inserts), the seen table is compacted
-# early to re-bound the per-wave scan.
-SEEN_COMPACT_RATIO = 3.0
 
 
 def _pageless_rows(rows: DataFrame, wave_id: int, code: int, chain: Column) -> DataFrame:
@@ -100,16 +94,6 @@ def _pageless_rows(rows: DataFrame, wave_id: int, code: int, chain: Column) -> D
         null("has_login_form", "boolean"), null("has_cookie_banner", "boolean"),
         chain.alias("redirect_chain"), null("body_sha256"), null("resheaders"),
     )
-
-
-def _release(df: DataFrame) -> None:
-    """Drop a frame's cached plan and, for a local checkpoint, its
-    blocks: ``unpersist()`` alone leaves a checkpoint's RDD persisted
-    until the driver happens to garbage-collect it."""
-    df.unpersist()
-    plan = df._jdf.queryExecution().logical()  # noqa: SLF001
-    if plan.nodeName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -170,8 +154,7 @@ class CrawlEngine:
         paths = [self._dir(table, w) for w in waves if os.path.isdir(self._dir(table, w))]
         if not paths:
             return None
-        # basePath anchors partition discovery for tables with
-        # directory-partitioned waves (seen: wave=N/sbucket=K/); the
+        # basePath anchors partition discovery at the table root; the
         # wave=N level surfaces as a synthetic "wave" column — drop it
         # (wave_id is real data where it matters)
         df = self.spark.read.option(
@@ -221,35 +204,10 @@ class CrawlEngine:
         )
         return {str(r.depth): r["count"] for r in per_depth_rows}
 
-    def _write_seen(self, seen: DataFrame, wave: int, n_files: Optional[int] = None) -> None:
-        """Every seen write is directory-partitioned by task bucket
-        (``sbucket = task_id mod seen_buckets``) so scheduler-mode
-        waves can prune the persistent-seen read to the buckets their
-        scheduled tasks live in. Salted within a bucket: a mega-task's
-        keys would otherwise land in one file."""
-        cfg = self.cfg
-        out = seen.select(
-            "task_id",
-            "url_norm",
-            F.pmod(F.col("task_id"), F.lit(cfg.seen_buckets))
-            .cast("int")
-            .alias("sbucket"),
-        )
-        if n_files == 1:
-            out = out.repartition(1)
-        else:
-            # shuffle on (sbucket, small salt): each write task then
-            # holds 1-2 bucket values, so the dynamic-partition writer
-            # opens few files (total files = seen_buckets x salt, not
-            # partitions x buckets) while a mega-task still spreads
-            # over `salt` parallel slots
-            salt = max(2, SALT_BUCKETS // 4)
-            out = out.repartition(
-                cfg.host_buckets,
-                "sbucket",
-                F.pmod(F.xxhash64("url_norm"), F.lit(salt)),
-            )
-        out.write.partitionBy("sbucket").parquet(self._dir("seen", wave))
+    def _write_seen(self, seen: DataFrame, wave: int) -> None:
+        """One flat seen delta per wave, written as given: no shuffle,
+        no directory partitioning (like ``fetches``)."""
+        seen.select("task_id", "url_norm").write.parquet(self._dir("seen", wave))
 
     # ----- job init (S1 seed ingest, add_tasks_tranco.py:16-52) -----------
 
@@ -367,7 +325,7 @@ class CrawlEngine:
             # (seen-add first, dedup by normalized key, insertion order).
             assert self.cfg.depth >= 1, "login_seed_injection needs depth >= 1"
             frontier, seen = self._login_injection(tasks, frontier)
-            self._write_seen(seen, wave_id, n_files=1)
+            self._write_seen(seen, wave_id)
             tables.append("seen")
         frontier = frontier.cache()
         frontier.repartition(self.cfg.host_buckets, "host").write.parquet(
@@ -681,7 +639,7 @@ class CrawlEngine:
                     h.shutdown(wait=True, cancel_futures=True)
             for h in reversed(held):  # dependent frames before their inputs
                 if isinstance(h, DataFrame):
-                    _release(h)
+                    release(h)
 
     def _run_wave_body(self, m: Dict, depth: int, held: List) -> Dict:
         cfg = self.cfg
@@ -977,26 +935,6 @@ class CrawlEngine:
                 held.append(cands)
             if seen_all is None:
                 seen_all = empty_df(self.spark, "task_id long, url_norm string")
-            elif cfg.sub_waves and "sbucket" in seen_all.columns:
-                # politeness sub-waves touch a subset of tasks: prune
-                # the persistent seen read to the task buckets present
-                # in THIS wave (directory-partition pruning — the scan
-                # never lists, reads or hashes the other buckets), then
-                # bloom, then exact semi-join. In atomic-depth mode
-                # every task is in every wave, so pruning is a no-op
-                # and the bucket probe job is skipped.
-                bks = [
-                    r[0]
-                    for r in wave.select(
-                        F.pmod(F.col("task_id"), F.lit(cfg.seen_buckets))
-                        .cast("int")
-                        .alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                if len(bks) < cfg.seen_buckets:
-                    seen_all = seen_all.filter(F.col("sbucket").isin(bks))
             # bloom prefilter pays off once the persistent seen table
             # dwarfs the wave; below the threshold the exact semi-join
             # alone is cheaper (2 fewer jobs per wave)
@@ -1054,15 +992,12 @@ class CrawlEngine:
             # snapshot — all three read the eagerly-materialized kernel
             # checkpoint, independent of each other and of the fetch
             # write.
-            # seen: wave-internal distinct only. Replays of keys
+            # seen: the kernel's keys as they are. Replays of keys
             # already in older deltas are harmless — every consumer
             # (bloom build, semi-join, kernel set) is idempotent on
             # duplicates — so no cross-history anti-join and no
-            # distinct (it was a full shuffle). Directory-partitioned
-            # by task bucket (see _write_seen) for pruned reads.
-            fut_seen = pool.submit(
-                self._write_seen, kout.select("task_id", "url_norm"), wave_id
-            )
+            # distinct (it was a full shuffle).
+            fut_seen = pool.submit(self._write_seen, kout, wave_id)
 
             def _job_tasks():
                 # budgets + max_seq: ONE Spark job over (tasks snapshot
@@ -1158,39 +1093,11 @@ class CrawlEngine:
         m["waves"].append(
             {"wave_id": wave_id, "depth": depth, "kind": "fetch",
              "tables": wrote, "found": n_found,
-             "insert_depth": depth + 1, "n_inserted": n_inserted,
-             # delta rows appended to seen this wave (links + parent
-             # self-seen rows) — feeds the duplicate-ratio compaction
-             # heuristic in run()
-             "seen_rows": (n_found + n_hits) if "seen" in wrote else 0}
+             "insert_depth": depth + 1, "n_inserted": n_inserted}
         )
         m["next_wave"] = wave_id + 1
         self._save_manifest(m)
-        self._maybe_compact_seen(m)
         return stats
-
-    def _maybe_compact_seen(self, m: Dict) -> None:
-        """Seen deltas skip the dedup shuffle, so duplicate keys
-        (redirected parents sharing a final url, re-sightings across
-        waves) accumulate and inflate every later wave's seen scan +
-        bloom build. When cumulative delta rows exceed
-        ``SEEN_COMPACT_RATIO`` x the distinct lower bound (frontier
-        inserts — each inserted exactly once), compact just the seen
-        table to re-bound the growth between full compactions."""
-        waves = [w for w in m["waves"] if "seen" in w.get("tables", [])]
-        if len(waves) <= 1:
-            return
-        rows = sum(w.get("seen_rows", 0) for w in m["waves"])
-        distinct_lb = sum(w.get("n_inserted", 0) for w in m["waves"])
-        if rows > SEEN_COMPACT_RATIO * max(1, distinct_lb):
-            out = self.compact(tables=("seen",))
-            # reset the counter to the actual post-compaction row count
-            # so the heuristic measures growth SINCE this compaction
-            m2 = self._load_manifest()
-            for w in m2["waves"]:
-                w["seen_rows"] = 0
-            m2["waves"][0]["seen_rows"] = out.get("seen", 0)
-            self._save_manifest(m2)
 
     # ----- full run -----------------------------------------------------------
 
@@ -1249,16 +1156,11 @@ class CrawlEngine:
             salt_col = "url_norm" if "url_norm" in df.columns else (
                 "url" if "url" in df.columns else key
             )
-            writer = df.repartition(
+            df.repartition(
                 self.cfg.host_buckets,
                 F.col(key),
                 F.pmod(F.xxhash64(salt_col), F.lit(SALT_BUCKETS)),
-            ).write.mode("overwrite")
-            if "sbucket" in df.columns:
-                # seen: keep the directory-partitioned layout so the
-                # pruned read path survives compaction
-                writer = writer.partitionBy("sbucket")
-            writer.parquet(tmp)
+            ).write.mode("overwrite").parquet(tmp)
             n = self.spark.read.parquet(tmp).count()
             out[table] = n
             # commit: swap dirs, then rewrite manifest table pointers

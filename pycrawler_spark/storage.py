@@ -53,9 +53,9 @@ ICEBERG_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
 PARTITION_SPECS: Dict[str, str] = {
     "fetches": "bucket(64, host)",
     "frontier": "bucket(64, host)",
-    "seen": "sbucket",          # engine's own task-bucket column (pruned reads)
     "requests": "bucket(64, host)",
     "lineage": "bucket",         # engine's host-bucket column
+    "seen": "",
     "tasks": "",
     "metrics": "",
 }

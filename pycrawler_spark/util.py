@@ -22,3 +22,13 @@ def empty_df(spark: SparkSession, schema: str) -> DataFrame:
         name, typ = field.strip().split(" ", 1)
         cols.append(F.lit(None).cast(typ.strip()).alias(name))
     return spark.range(0).select(*cols)
+
+
+def release(df: DataFrame) -> None:
+    """Drop a frame's cached plan and, for a local checkpoint, its
+    blocks: ``unpersist()`` alone leaves a checkpoint's RDD persisted
+    until the driver happens to garbage-collect it."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()  # noqa: SLF001
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

@@ -958,6 +958,42 @@ def test_pagerank_matches_local_twin(spark):
     assert got["b"] > got["d"]
 
 
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
+
+
+@pytest.mark.parametrize("op", ["pagerank", "dup_clusters"])
+def test_iterative_graph_ops_release_their_checkpoints(spark, op):
+    """Setup and per-round local checkpoints are released once nothing
+    reads them: after the result is collected, at most the final
+    round's checkpoint stays persisted (and none after dup_clusters
+    fails to converge)."""
+    from pycrawler_spark.operators.dedup import dup_clusters
+    from pycrawler_spark.operators.graph import pagerank, pagerank_local
+
+    before = _persisted_rdds(spark)
+    if op == "pagerank":
+        edge_list = [(f"n{i}", f"n{(i * 7 + k) % 40}") for i in range(50) for k in (1, 3)]
+        df = spark.createDataFrame(edge_list, "src string, dst string")
+        got = {r.node: r.rank for r in pagerank(df, iters=5).collect()}
+        want = pagerank_local(edge_list, iters=5)
+        assert set(got) == set(want)
+        assert all(abs(got[v] - want[v]) < 1e-9 for v in want)
+    else:
+        nodes = spark.createDataFrame([(i,) for i in range(100)], "doc_id long")
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(99) if i % 10 != 9], "id_a long, id_b long"
+        )
+        out = dup_clusters(nodes, pairs).collect()
+        assert {r.doc_id: r.cluster_id for r in out} == {i: i - i % 10 for i in range(100)}
+    assert len(_persisted_rdds(spark) - before) <= 1
+    if op == "dup_clusters":
+        before = _persisted_rdds(spark)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dup_clusters(nodes, pairs, max_iters=1)
+        assert not _persisted_rdds(spark) - before
+
+
 def test_topk_per_group_salted_matches_plain_window(spark):
     """The salted two-phase top-k must equal the single-window answer
     on a skewed distribution (one group holds 90% of rows), including

@@ -1,7 +1,8 @@
-"""Dead-code guards (no Spark): every top-level function and class in
-``pycrawler_spark/`` must be referenced somewhere in the repository's
-Python — engine, scripts, benchmark, driver entry or tests — and every
-``CrawlConfig`` field must be read by the engine itself."""
+"""Dead-code guards (no Spark): every top-level function, class and
+assigned name in ``pycrawler_spark/`` must be referenced somewhere in
+the repository's Python — engine, scripts, benchmark, driver entry or
+tests — and every ``CrawlConfig`` field must be read by the engine
+itself."""
 
 import ast
 import os
@@ -19,6 +20,23 @@ def _python_files():
                 yield os.path.join(d, n)
 
 
+def _defined_names(node):
+    """Names a module-level statement defines: a def/class name, or the
+    plain names an assignment binds (dunders such as ``__all__`` are
+    module protocol, not code)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    names = [n.id for t in targets for n in ast.walk(t)
+             if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)]
+    return [x for x in names if not (x.startswith("__") and x.endswith("__"))]
+
+
 def test_no_unreferenced_top_level_definitions():
     defined = []
     referenced = set()
@@ -27,12 +45,12 @@ def test_no_unreferenced_top_level_definitions():
             tree = ast.parse(f.read(), path)
         if path.startswith(PACKAGE + os.sep):
             defined += [
-                (os.path.relpath(path, ROOT), n.name)
+                (os.path.relpath(path, ROOT), name)
                 for n in tree.body
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                for name in _defined_names(n)
             ]
         for n in ast.walk(tree):
-            if isinstance(n, ast.Name):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
                 referenced.add(n.id)
             elif isinstance(n, ast.Attribute):
                 referenced.add(n.attr)

@@ -217,6 +217,38 @@ def test_politeness_preserves_order_and_sets(spark, tmp_path):
     assert len(depths) > len(set(depths)), "expected sub-waves"
 
 
+@pytest.mark.parametrize("politeness", [False, True], ids=["atomic", "politeness"])
+def test_tight_budget_keeps_flat_seen_deltas(spark, tmp_path, monkeypatch, politeness):
+    """A binding budget (max_urls=1) leaves most found links out of the
+    frontier. run() must still never compact: every link-collecting
+    wave keeps its own flat seen delta of (task_id, url_norm) files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    def no_compact(self, tables=("frontier", "seen", "fetches")):
+        raise AssertionError(f"run() compacted {tables}")
+
+    monkeypatch.setattr(CrawlEngine, "compact", no_compact)
+    cfg = CrawlConfig(depth=2, max_urls=1, politeness=politeness)
+    eng, sim = _run_both(spark, tmp_path, cfg)
+    assert _visits(eng) == sim.visits
+    assert _seen(eng) == {t: s for t, s in sim.seen.items() if s}
+
+    m = eng._load_manifest()
+    link_waves = [w["wave_id"] for w in m["waves"]
+                  if w["kind"] == "fetch" and w["depth"] < cfg.depth]
+    assert len(link_waves) >= 2
+    assert eng._committed(m, "seen") == link_waves
+    for w in link_waves:
+        d = eng._dir("seen", w)
+        files = [n for n in os.listdir(d) if n.endswith(".parquet")]
+        assert files
+        assert not any(os.path.isdir(os.path.join(d, n)) for n in os.listdir(d))
+        for n in files:
+            assert pq.read_schema(os.path.join(d, n)).names == ["task_id", "url_norm"]
+
+
 def test_compaction_preserves_state_and_future_ingest(spark, tmp_path):
     """compact() merges per-wave deltas into one snapshot without
     changing table contents; a later streamed seed ingest still crawls

@@ -188,44 +188,6 @@ def test_hot_host_salting_bounds_partitions(spark):
     assert control >= 9_000
 
 
-def test_seen_read_prunes_task_buckets(spark, tmp_path):
-    """The persistent seen table is directory-partitioned by task
-    bucket (sbucket = task_id mod seen_buckets); a scheduler-mode wave
-    must read ONLY the buckets of the tasks it scheduled — the scan's
-    partition filter proves the other buckets are never listed,
-    read, or hashed."""
-    from pycrawler_spark.config import CrawlConfig
-    from pycrawler_spark.plans.crawl import CrawlEngine
-    from pycrawler_spark.sources.corpus import write_corpus
-
-    pages_p, seeds_p, _ = write_corpus(
-        str(tmp_path / "c"), seed=7, n_hosts=4, pages_per_host=8, mega_factor=2
-    )
-    cfg = CrawlConfig(depth=1, max_urls=20, seen_buckets=8)
-    eng = CrawlEngine(spark, str(tmp_path / "job"), cfg, job="prune")
-    eng.init_job(spark.read.parquet(seeds_p), pages_p)
-    eng.run()
-
-    seen = eng.table("seen")
-    assert "sbucket" in seen.columns
-    # the layout on disk is really directory-partitioned
-    m = eng._load_manifest()
-    some_wave = max(eng._committed(m, "seen"))
-    sub = os.listdir(eng._dir("seen", some_wave))
-    assert any(d.startswith("sbucket=") for d in sub), sub
-
-    # a bucket-subset filter must become a PartitionFilter on the scan
-    pruned = seen.filter(F.col("sbucket").isin([1, 3]))
-    plan = _formatted(pruned)
-    assert "PartitionFilters" in plan
-    seg = plan[plan.index("PartitionFilters"):].splitlines()[0]
-    assert "sbucket" in seg, seg
-    # and the pruned read returns exactly the matching tasks' keys
-    rows = pruned.select("task_id").distinct().collect()
-    assert all(r.task_id % 8 in (1, 3) for r in rows)
-    assert rows, "expected tasks in buckets 1/3"
-
-
 def test_topk_is_take_ordered_not_global_window(spark):
     """The exact top-k must plan as TakeOrderedAndProject (per-partition
     local top-k merged on the driver), never a single-partition sort of
