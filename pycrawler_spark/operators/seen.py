@@ -3,10 +3,11 @@
 The reference keeps a per-task Python ``set`` of normalized URLs
 (database.py:254-255, 287-291) pickled into ``task.crawlerstate``.
 This engine persists the seen set as a columnar table
-``seen(task_id, url_norm)`` (one flat parquet delta per wave, which may
-repeat keys) and uses a Bloom filter only as a *prefilter* — never as the source of
-truth, because a Bloom false positive would DROP a URL the reference
-keeps and break seen-set parity (SURVEY.md §7 hard part #2).
+``seen(task_id, url_norm)`` (one flat parquet delta per wave; keys
+may repeat across waves) and uses a Bloom filter only as a
+*prefilter* — never as the source of truth, because a Bloom false
+positive would DROP a URL the reference keeps and break seen-set
+parity (SURVEY.md §7 hard part #2).
 
 Dataflow per wave (the 10^10-frontier design):
 

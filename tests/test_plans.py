@@ -6,8 +6,6 @@ fat ``html`` column, whole-stage codegen on relational stages —
 so perf properties are pinned by CI, not by hope.
 """
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
